@@ -390,8 +390,9 @@ def main():
     key = f"bench-wal2-{BENCH_PAGES}-{BENCH_EVENTS}-{AVG_WORDS}-{N_EPOCHS}"
     wal_dir = os.path.join(SCRATCH or tempfile.gettempdir(), key)
     # evict caches for OTHER settings: tmpfs pages are unswappable RAM here,
-    # and stale multi-GB WALs have OOM-killed a 48g-heap replay JVM before
-    # (dmesg 'Killed process (java)'; py4j sees only 'Connection refused')
+    # and stale multi-GB WALs add to what the replay JVM (heap up to half
+    # of host memory) already holds; the kernel's OOM kill shows in dmesg
+    # as 'Killed process (java)', to py4j only as 'Connection refused'
     scratch_root = SCRATCH or tempfile.gettempdir()
     for d in os.listdir(scratch_root):
         if (d.startswith(("bench-wal", "soak-wal")) and d != key):
