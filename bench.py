@@ -20,7 +20,7 @@ Sections, gate-priority order:
 - queries: wall time of every __spark_entry__.queries() entry at
   $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 - streaming: the same WAL through the Structured Streaming front-end.
-- scaling_2to8 / lake_compare: secondary evidence legs.
+- scaling_2to8: secondary evidence leg.
 - kernel MB/s: per-algorithm single-core chunking throughput (mirrors the
   reference's filetest metric, filetest.rs:84-87); pass 1 runs at startup,
   pass 2 at the end — per-kernel max across two far-apart windows is the
@@ -80,13 +80,12 @@ def _sf_of(path: str) -> float:
         return -1.0
 
 
-def _mk_replay_job(cpus: int, lake_mode: str, prefix: str):
+def _mk_replay_job(cpus: int, prefix: str):
     """Shared setup for the batch and streaming replay legs: session, tmpfs
     lake, steady-state job, and the two-pass kernel-UDF warm-up. BOTH legs
     must go through here — the streaming leg's value is its delta vs batch,
     which only isolates front-end overhead if the setup is identical."""
-    from rust_chunking_spark.engine import (BucketedLake, CdcIngestJob,
-                                            MorBucketedLake)
+    from rust_chunking_spark.engine import CdcIngestJob, MorBucketedLake
     from rust_chunking_spark.engine.lake import AppendOnlyTable
     from rust_chunking_spark.session import get_spark
 
@@ -95,8 +94,7 @@ def _mk_replay_job(cpus: int, lake_mode: str, prefix: str):
     spark = get_spark(app_name=f"{prefix}-{cpus}", cpus=cpus,
                       shuffle_partitions=32)
     tmp = tempfile.mkdtemp(prefix=f"{prefix}-{cpus}-", dir=SCRATCH)
-    lake_cls = MorBucketedLake if lake_mode == "mor" else BucketedLake
-    lake = lake_cls(f"{tmp}/lake", n_buckets=32)
+    lake = MorBucketedLake(f"{tmp}/lake", n_buckets=32)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(f"{tmp}/chunks"),
                        AppendOnlyTable(f"{tmp}/metrics"), algo="super",
                        collect_metrics=False)
@@ -114,10 +112,8 @@ def _mk_replay_job(cpus: int, lake_mode: str, prefix: str):
     return spark, tmp, job
 
 
-def replay_bench(cpus: int, wal_dir: str, total_events: int,
-                 lake_mode: str | None = None) -> dict:
-    lake_mode = lake_mode or os.environ.get("SPARK_GRAFT_LAKE", "mor")
-    spark, tmp, job = _mk_replay_job(cpus, lake_mode, "lake")
+def replay_bench(cpus: int, wal_dir: str, total_events: int) -> dict:
+    spark, tmp, job = _mk_replay_job(cpus, "lake")
     try:
         t0 = time.perf_counter()
         results = []
@@ -131,14 +127,13 @@ def replay_bench(cpus: int, wal_dir: str, total_events: int,
         dt = time.perf_counter() - t0
         seen = sum(m.events_seen for m in results) or total_events
         return {"cpus": cpus, "seconds": dt, "events": seen,
-                "events_per_sec": seen / dt, "lake": lake_mode}
+                "events_per_sec": seen / dt}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
         spark.stop()
 
 
-def stream_replay_bench(cpus: int, wal_dir: str, total_events: int,
-                        lake_mode: str | None = None) -> dict:
+def stream_replay_bench(cpus: int, wal_dir: str, total_events: int) -> dict:
     """Streaming leg (VERDICT r3 missing #4): the same WAL driven through
     the Structured Streaming front-end (availableNow + per-batch WAL sweep
     + explicit tail drain) instead of batch `job.run`. Timed region matches
@@ -148,8 +143,7 @@ def stream_replay_bench(cpus: int, wal_dir: str, total_events: int,
     from rust_chunking_spark.streaming import (drain_open_epochs,
                                                start_stream_ingest)
 
-    lake_mode = lake_mode or os.environ.get("SPARK_GRAFT_LAKE", "mor")
-    spark, tmp, job = _mk_replay_job(cpus, lake_mode, "slake")
+    spark, tmp, job = _mk_replay_job(cpus, "slake")
     try:
         t0 = time.perf_counter()
         q = start_stream_ingest(spark, job, wal_dir, f"{tmp}/ckpt")
@@ -159,7 +153,7 @@ def stream_replay_bench(cpus: int, wal_dir: str, total_events: int,
         dt = time.perf_counter() - t0
         n_epochs = len(job.lake.committed_epochs())
         return {"cpus": cpus, "seconds": dt, "events": total_events,
-                "events_per_sec": total_events / dt, "lake": lake_mode,
+                "events_per_sec": total_events / dt,
                 "epochs": n_epochs, "mode": "stream"}
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -292,9 +286,9 @@ def gate_summary(result: dict) -> str:
             round(sum(result["section_seconds"].values()), 1),
         "skipped": [s["section"] for s in result["skipped"]],
     }
-    for k in ("scaling", "streaming", "lake_compare", "scaling_2to8",
+    for k in ("scaling", "streaming", "scaling_2to8",
               "kernel_scaling", "kernels_mb_s", "replay_events",
-              "value_cores", "lake_mode"):
+              "value_cores"):
         if k in result:
             summary[k] = _slim(result[k])
     if "errors" in result:
@@ -304,8 +298,7 @@ def gate_summary(result: dict) -> str:
     # shapes (ADVICE r6 #3): after them only the headline scalars remain,
     # which cannot reach 1500 chars
     for drop in ("kernels_mb_s", "kernel_scaling", "scaling_2to8",
-                 "lake_compare", "errors", "skipped", "streaming",
-                 "scaling"):
+                 "errors", "skipped", "streaming", "scaling"):
         if len(line) <= 1500:
             break
         summary.pop(drop, None)
@@ -322,12 +315,11 @@ def main():
     ap.add_argument("--cpus", type=int, default=CPUS)
     ap.add_argument("--wal-dir", default="")
     ap.add_argument("--events", type=int, default=0)
-    ap.add_argument("--lake", default=None, choices=["cow", "mor"])
     args = ap.parse_args()
 
     if args.replay:
         fn = stream_replay_bench if args.stream else replay_bench
-        r = fn(args.cpus, args.wal_dir, args.events, lake_mode=args.lake)
+        r = fn(args.cpus, args.wal_dir, args.events)
         print("REPLAY_JSON:" + json.dumps(r))
         return
 
@@ -400,8 +392,7 @@ def main():
     marker = os.path.join(wal_dir, "_DONE")
     total = 0
 
-    def replay_at(c: int, pin: bool = True, lake: str | None = None,
-                  stream: bool = False) -> dict:
+    def replay_at(c: int, pin: bool = True, stream: bool = False) -> dict:
         # taskset pins the WHOLE process tree (JVM GC/compression threads,
         # python UDF workers) to exactly c cores. local[c] alone only
         # limits task slots — JVM service threads would still fan out over
@@ -412,8 +403,6 @@ def main():
                "--events", str(total)]
         if stream:
             cmd += ["--stream"]
-        if lake:
-            cmd += ["--lake", lake]
         if pin and shutil.which("taskset") and c < CPUS:
             # top cpu ids: cpu 0 takes IRQ/housekeeping load, which would
             # handicap the small-N run and flatter the efficiency number
@@ -492,7 +481,6 @@ def main():
             eff = (max(samples[n4][:k]) / max(samples[n][:k])) / (n4 / n)
             result["value"] = max(samples[n4])
             result["value_cores"] = n4
-            result["lake_mode"] = r.get("lake", "mor")
             result["scaling"] = {
                 "cores_n": n, "cores_4n": n4,
                 "tput_n": max(samples[n]), "tput_4n": max(samples[n4]),
@@ -554,33 +542,6 @@ def main():
                 "tput_batch": round(batch_ref, 1),
                 "stream_over_batch": round(stream_best / batch_ref, 3),
                 "draws_per_side": sk,
-            }
-
-    # sink-mode comparison at the 4N level (same WAL, same pinning): MoR is
-    # the default bench mode; the COW side records the delta between
-    # O(changed-bytes) and O(dirty-bucket-bytes) per-epoch IO. Runs BEFORE
-    # scaling_2to8 (VERDICT r5 next #3): the 2->8 pair is disclosure
-    # evidence, the COW/MoR delta is an engineering number users act on,
-    # and it has lost the budget race two rounds running. Equal-draw rule
-    # (ADVICE r5 #1): the default side's best is taken over the FIRST ck
-    # scaling samples — never over extra 4N draws the other side didn't
-    # get — and both actual draw counts are reported.
-    with sect("lake_compare"):
-        mode = result.get("lake_mode", "mor")
-        other = "cow" if mode == "mor" else "mor"
-        draw_est = (3.4 if other == "cow" else 2.2) * (t4 or 600) / 2
-        ck = eff_k
-        while ck > 1 and elapsed() + ck * draw_est > budget - margin:
-            ck -= 1   # degrade to fewer draws before skipping outright
-        if (wal_gate("lake_compare") and t4 and samples[n4]
-                and fits("lake_compare", ck * draw_est)):
-            cmp_best = max(replay_at(n4, lake=other)["events_per_sec"]
-                           for _ in range(ck))
-            default_draws = samples[n4][:ck]
-            result["lake_compare"] = {
-                f"{mode}_{n4}c": max(default_draws),
-                f"{other}_{n4}c": round(cmp_best, 1),
-                "draws_other": ck, "draws_default": len(default_draws),
             }
 
     # Secondary 2N->8N pair (VERDICT r3 #7): quantifies where this

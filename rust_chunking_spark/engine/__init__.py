@@ -1,3 +1,2 @@
-from .lake import (AppendOnlyTable, BucketedLake, ChunkStore,  # noqa: F401
-                   MorBucketedLake)
+from .lake import AppendOnlyTable, ChunkStore, MorBucketedLake  # noqa: F401
 from .ingest import CdcIngestJob, IngestMetrics  # noqa: F401

@@ -1,61 +1,55 @@
-"""CDC ingest: WAL micro-batches -> exactly-once MERGE into the bucketed lake.
+"""CDC ingest: WAL micro-batches -> exactly-once MERGE into the
+merge-on-read bucketed lake (``MorBucketedLake``).
 
-Per-epoch pipeline (north_star, BASELINE.json), engineered so WIDE rows (html)
-are never shuffled — all decisions happen on skinny metadata:
+Per-epoch pipeline (north_star, BASELINE.json), engineered so decisions
+happen on skinny metadata and WIDE rows (html) reach a shuffle only once,
+after every unchanged page has been dropped:
 
   events(epoch)                                [source: parquet segment]
     -> LWW winners via SKINNY aggregate        [shuffle of (url,ts,lsn,uid)
        groupBy(url).max(struct(ts,lsn,uid))     ~60B/row, map-side combined]
     -> broadcast join-back to fetch wide rows  [map-side; no wide shuffle]
-    -> content_fp = sha3(html) pandas UDF      [cheap; no chunking yet]
-    -> decision join: winner meta vs lake meta [COLUMN-PRUNED read of dirty
-       (url, warc_ts, lsn, content_fp,          buckets: html/text never leave
-        deleted) — skinny left join]            the parquet file for this]
-    -> verdicts: insert/update/delete/noop/skip_late/skip_duplicate
-       (noop advances (warc_ts,lsn) metadata but skips content work)
-    -> row assembly, all via broadcast semi/anti joins (map-side):
-         content rows   = winners  ⋉ applied(insert|update)
-         noop rows      = cur wide ⋉ noop urls, metadata overridden
-         delete rows    = tombstones from meta
-         carry rows     = cur wide anti-join applied urls (pass-through)
-    -> chunk ONLY insert/update rows (round-robin repartition balances the
-       pandas-UDF compute regardless of domain/url skew)
+    -> pre-decision join: winner meta vs lake  [SKINNY meta read of the
+       meta (url, warc_ts, lsn, content_fp,     dirty buckets: html/text
+        deleted)                                live only in wide deltas]
+    -> verdicts insert/delete/skip_late/skip_duplicate, or content_check
+       for rows that need a fingerprint comparison
+    -> ONE fused UDF pass over the content candidates (inserts +
+       content_check): sha3 fingerprint, and chunking only when it differs
+       from current state; unchanged recrawls are dropped BEFORE the
+       bucket shuffle (round-robin placement balances the UDF compute
+       regardless of domain/url skew)
+    -> uncommitted wide delta write: applied insert/update content only;
+       a content_check row present in it is an update, an absent one a
+       noop (noop advances (warc_ts,lsn) metadata but skips content work)
+    -> skinny meta for the dirty buckets, rebuilt from current meta + the
+       verdicts via broadcast joins (map-side)
+    -> lake.commit_delta(...)  [delta + meta land in one atomic snapshot
+       flip = commit marker (epoch); replaying a committed epoch is a
+       no-op => exactly-once]
     -> chunk store: observability mode anti-joins vs the store (exact dedup
        stats, globally-unique table, deduped=true manifest flag);
-       steady-state buffers the epoch's merge-file list and folds ALL
+       steady-state buffers the epoch's delta-file list and folds ALL
        pending epochs into ONE append at flush() (deduped=false flag;
        global uniqueness moves to chunk_store_current / ChunkStore.compact)
        — O(epoch) read at flush, ZERO per-epoch store work
     -> metrics + per-bucket lineage appended (steady-state: counted by an
        observe node riding the meta-write job — no dedicated lineage action)
-    -> lake.overwrite_buckets(...)  [atomic snapshot flip = commit marker
-       (epoch); replaying a committed epoch is a no-op => exactly-once]
 
 Driver-action budget (the Amdahl term of the N->4N scaling rule): a
-steady-state MoR epoch runs THREE Spark actions — the fused LWW collect,
-the one wide content pass, and the meta-commit write (which the lineage
-observation and snapshot stats ride) — plus two end-of-replay flush writes
-shared across all epochs.
+steady-state epoch runs THREE Spark actions — the fused LWW collect, the one
+wide content pass, and the meta-commit write (which the lineage observation
+and snapshot stats ride) — plus two end-of-replay flush writes shared across
+all epochs.
 
-Scale notes (100 TB): the only wide shuffles are the final bucket repartition
-for the write and the fallback when a batch's winner set exceeds
-``broadcast_limit`` (then Spark's SMJ + AQE skew split take over). Everything
-else is map-side or skinny. The chunking UDF is the dominant compute and runs
-only on truly-changed rows.
-
-Two sink modes, selected by the lake class:
-
-- **COW** (``BucketedLake``): the flow above — dirty buckets fully rewritten,
-  decisions from a column-pruned wide read, sha3 + chunking as two passes.
-- **MoR** (``MorBucketedLake``): decisions read a SKINNY meta table; content
-  candidates (inserts + fingerprint-comparison rows) are fingerprinted AND —
-  only when changed vs current state — chunked, in ONE fused UDF pass;
-  unchanged recrawls are dropped BEFORE the bucket shuffle (r8), so the
-  uncommitted delta files hold applied content only; the noop/update split
-  is decided from presence in the staged files; an atomic commit lands
-  delta + meta together. Per-epoch wide IO is O(changed bytes) and the wide
-  event column is decoded once, not twice — measured ~40% faster than COW
-  in r6 plus a further 1.15-1.22x interleaved in r8 (see BENCH.md).
+Scale notes (100 TB): the only wide shuffle is the bucket repartition of the
+changed rows for the delta write, plus the fallback when a batch's winner set
+exceeds ``broadcast_limit`` (then Spark's SMJ + AQE skew split take over).
+Everything else is map-side or skinny. The chunking UDF is the dominant
+compute and runs only on truly-changed rows. Per-epoch wide IO is
+O(changed bytes) and the wide event column is decoded once — measured ~40%
+faster than a copy-on-write sink in r6, plus a further 1.15-1.22x
+interleaved in r8; BENCH.md records both and why that sink was retired.
 """
 
 from __future__ import annotations
@@ -65,9 +59,8 @@ import dataclasses
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.errors import AnalysisException
 
-from ..functions.chunking import (FP_CHUNK_SCHEMA, content_skip_udf,
-                                  fingerprint_udf, sha3_256_udf)
-from .lake import AppendOnlyTable, BucketedLake
+from ..functions.chunking import content_skip_udf
+from .lake import AppendOnlyTable, ChunkStore, MorBucketedLake
 
 SALT_BUCKETS = 16
 
@@ -94,7 +87,7 @@ class IngestMetrics:
 
 
 class CdcIngestJob:
-    def __init__(self, spark: SparkSession, lake: BucketedLake,
+    def __init__(self, spark: SparkSession, lake: MorBucketedLake,
                  chunk_store: AppendOnlyTable, metrics: AppendOnlyTable,
                  algo: str = "super", chunk_params: dict | None = None,
                  salt_lww: bool = False, collect_metrics: bool = True,
@@ -246,27 +239,21 @@ class CdcIngestJob:
         m.events_seen = int(sum(r.seen for r in per_bucket))
         m.in_batch_superseded = m.events_seen - n_winners
 
-        mor = getattr(self.lake, "MOR", False)
         extras = [c for c in latest.columns
                   if c not in {"url", "warc_ts", "lsn", "op", "html", "text",
                                "lang", "__fp", "n_events", "epoch"}]
-        if mor:
-            merge_files, iu_urls = self._apply_epoch_mor(
-                m, latest, dirty, n_winners, extras, epoch, _mark)
-        else:
-            merge_files, iu_urls = self._apply_epoch_cow(
-                m, latest, dirty, n_winners, extras, epoch, _mark)
+        merge_files = self._merge(m, latest, dirty, n_winners, extras, epoch,
+                                  _mark)
 
         # derive the chunk store from the just-written files: a column-pruned
-        # read of (url, chunks) only — html never re-read. Crash between the
-        # lake commit and this append is repaired by run() via snapshot stats.
-        chunk_stats = self._update_chunk_store(merge_files, iu_urls, n_winners,
-                                               epoch)
+        # read of chunks only — html never re-read. Crash between the lake
+        # commit and this append is repaired by run() via snapshot stats.
+        chunk_stats = self._update_chunk_store(merge_files, epoch)
         _mark("chunk_store")
         m.chunks_total, m.chunks_new, m.bytes_total, m.bytes_new = chunk_stats
         if self.collect_metrics:
-            # ONE metrics append per epoch: decision lineage (stashed by the
-            # apply variant) + the chunk-length histogram from the store
+            # ONE metrics append per epoch: decision lineage (stashed by
+            # _merge) + the chunk-length histogram from the store
             # update. The metrics table's per-epoch commit marker no-ops a
             # second append for the same epoch, so these must write together.
             lin = [r.asDict() if hasattr(r, "asDict") else dict(r)
@@ -279,55 +266,22 @@ class CdcIngestJob:
         self.last_phase_timings = phases
         return m
 
-    # ----------------------------------------------------------- COW variant
+    # ----------------------------------------------------------------- merge
 
-    def _apply_epoch_cow(self, m: IngestMetrics, latest: DataFrame,
-                         dirty: list[int], n_winners: int, extras: list[str],
-                         epoch: int, _mark) -> tuple[list[str], DataFrame]:
-        """Copy-on-write apply: column-pruned decision read, full dirty-bucket
-        rewrite (wide carry/noop rows flow source->writer untouched)."""
-        cur_wide = self.lake.read(self.spark, buckets=dirty)
-        ev_meta = latest.select(
-            "url", F.col("warc_ts").alias("ev_warc_ts"),
-            F.col("lsn").alias("ev_lsn"), F.col("op").alias("ev_op"),
-            sha3_256_udf(F.col("html")).alias("ev_fp"),
-            *[F.col(c).alias(f"ev_x_{c}") for c in extras])
-        decided = self._join_cur(ev_meta, cur_wide).withColumn(
-            "decision", self._decision_expr()).cache()
-        lineage_rows = self._collect_lineage(decided, epoch, m)
-        _mark("decide_collect")
-        new_rows, iu_urls = self._assemble_rows(latest, decided, cur_wide,
-                                                n_winners, extras)
-        if self.collect_metrics:
-            # stashed; apply_epoch writes it together with the chunk-length
-            # histogram in one per-epoch metrics append
-            self._epoch_lineage = lineage_rows
-        else:
-            self._append_metrics(lineage_rows, epoch)   # buffers for flush
-        stats = {"__schema": new_rows.schema.json(), **dataclasses.asdict(m)}
-        merge_files = self.lake.overwrite_buckets(new_rows, dirty, epoch,
-                                                  stats)
-        _mark("merge_write")
-        decided.unpersist()
-        return merge_files, iu_urls
+    def _merge(self, m: IngestMetrics, latest: DataFrame, dirty: list[int],
+               n_winners: int, extras: list[str], epoch: int,
+               _mark) -> list[str]:
+        """Merge-on-read apply with ONE wide pass over the events; returns
+        the committed delta files.
 
-    # ----------------------------------------------------------- MoR variant
-
-    def _apply_epoch_mor(self, m: IngestMetrics, latest: DataFrame,
-                         dirty: list[int], n_winners: int, extras: list[str],
-                         epoch: int, _mark) -> tuple[list[str], DataFrame]:
-        """Merge-on-read apply with ONE wide pass over the events.
-
-        The COW path decodes the wide event column twice (a sha3 decision
-        pass, then the chunk+write pass). Here content candidates (inserts +
-        anything needing a fingerprint comparison) are fingerprinted AND —
-        only when the fingerprint differs from current state — chunked, in
-        a single fused UDF pass; unchanged (no-op) rows are dropped before
-        the bucket shuffle, so the delta holds APPLIED content only and
-        per-epoch wide IO is O(changed bytes). The no-op/update split is
-        then decided from presence in the just-written files (absence IS
-        the no-op verdict; the fingerprint comparison already happened
-        inside the UDF).
+        Content candidates (inserts + anything needing a fingerprint
+        comparison) are fingerprinted AND — only when the fingerprint
+        differs from current state — chunked, in a single fused UDF pass;
+        unchanged (no-op) rows are dropped before the bucket shuffle, so the
+        delta holds APPLIED content only and per-epoch wide IO is
+        O(changed bytes). The no-op/update split is then decided from
+        presence in the just-written files (absence IS the no-op verdict;
+        the fingerprint comparison already happened inside the UDF).
         """
         cur_meta_raw = self.lake.read_meta(self.spark, buckets=dirty)
         ev_pre = latest.select(
@@ -413,10 +367,8 @@ class CdcIngestJob:
             decided = decided.observe(
                 obs, *self._lineage_obs_exprs(dirty)).cache()
 
-        meta_rows = self._assemble_mor_meta(decided, cur_meta_raw, extras,
-                                            n_winners)
-        iu_urls = (decided.filter(F.col("decision").isin("insert", "update"))
-                   .select("url"))
+        meta_rows = self._assemble_meta(decided, cur_meta_raw, extras,
+                                        n_winners)
         if obs is None:
             if self.collect_metrics:
                 # stashed; apply_epoch writes it together with the
@@ -425,8 +377,8 @@ class CdcIngestJob:
             else:   # steady-state without an observation (no dirty buckets,
                     # or the >obs_lineage_max_buckets fallback): buffers
                 self._append_metrics(lineage_rows, epoch)
-            stats = {"__schema": self._mor_read_schema(cand_rows, meta_rows,
-                                                       extras),
+            stats = {"__schema": self._read_schema(cand_rows, meta_rows,
+                                                   extras),
                      "__meta_schema": meta_rows.schema.json(),
                      **dataclasses.asdict(m)}
         else:
@@ -436,7 +388,7 @@ class CdcIngestJob:
                 # so verdict counts still land in the committed stats
                 self._append_metrics(
                     self._lineage_from_obs(obs, dirty, epoch, m), epoch)
-                return {"__schema": self._mor_read_schema(
+                return {"__schema": self._read_schema(
                             cand_rows, meta_rows, extras),
                         "__meta_schema": meta_rows.schema.json(),
                         **dataclasses.asdict(m)}
@@ -444,15 +396,15 @@ class CdcIngestJob:
         _mark("merge_write")
         pre.unpersist()
         decided.unpersist()
-        return written, iu_urls
+        return written
 
     # ------------------------------------------------------------- decisions
 
     @staticmethod
     def _join_cur(ev_meta: DataFrame, cur_state: DataFrame | None
                   ) -> DataFrame:
-        """Attach cur_* columns (from a COW column-pruned read or a MoR meta
-        read — both expose url/warc_ts/lsn/content_fp/deleted)."""
+        """Attach cur_* columns from the lake's skinny meta read
+        (url/warc_ts/lsn/content_fp/deleted)."""
         if cur_state is None:
             return (ev_meta
                     .withColumn("cur_warc_ts", F.lit(None).cast("timestamp"))
@@ -526,25 +478,6 @@ class CdcIngestJob:
         return rows
 
     @staticmethod
-    def _decision_expr():
-        ev_newer = (
-            (F.col("ev_warc_ts") > F.col("cur_warc_ts"))
-            | ((F.col("ev_warc_ts") == F.col("cur_warc_ts"))
-               & (F.col("ev_lsn") > F.col("cur_lsn"))))
-        ev_equal = ((F.col("ev_warc_ts") == F.col("cur_warc_ts"))
-                    & (F.col("ev_lsn") == F.col("cur_lsn")))
-        return (
-            F.when(~F.col("cur_exists"),
-                   F.when(F.col("ev_op") == "D", F.lit("delete_noexist"))
-                   .otherwise(F.lit("insert")))
-            .when(ev_equal, F.lit("skip_duplicate"))
-            .when(~ev_newer, F.lit("skip_late"))
-            .when(F.col("ev_op") == "D", F.lit("delete"))
-            .when(F.col("cur_deleted"), F.lit("insert"))
-            .when(F.col("ev_fp") == F.col("cur_fp"), F.lit("noop"))
-            .otherwise(F.lit("update")))
-
-    @staticmethod
     def _pre_decision_expr():
         """Decision WITHOUT the fingerprint comparison: rows that need it
         come out as 'content_check' and split into noop/update after the
@@ -567,75 +500,8 @@ class CdcIngestJob:
 
     # ---------------------------------------------------------- row assembly
 
-    def _assemble_rows(self, latest: DataFrame, decided: DataFrame,
-                       cur_wide: DataFrame | None, n_winners: int,
-                       extras: list[str]
-                       ) -> tuple[DataFrame, DataFrame]:
-        """Post-merge rows for the dirty buckets + the changed-content subset.
-
-        Every join here is a broadcast semi/anti join on urls (map-side);
-        wide rows stream straight from their source files to the writer.
-        """
-        applied_urls = (decided.filter(F.col("decision").isin(
-            "insert", "update", "delete", "delete_noexist", "noop"))
-            .select("url", "decision"))
-
-        # content rows: winners with decision insert/update; the page
-        # fingerprint rides in on the broadcast (sha3 is never recomputed)
-        iu = (decided.filter(F.col("decision").isin("insert", "update"))
-              .select("url", "ev_fp"))
-        content = latest.join(self._bcast(iu, n_winners), "url", "inner")
-        fp_udf = fingerprint_udf(self.algo, records=self.records,
-                                 **self.chunk_params)
-        content_rows = content.select(
-            "url", "warc_ts", "lsn", "html", "text", "lang",
-            F.col("ev_fp").alias("content_fp"), F.lit(False).alias("deleted"),
-            fp_udf(F.col("html")).alias("chunks"),
-            *extras)
-
-        # tombstones (delete, delete_noexist): metadata only
-        del_rows = (decided.filter(F.col("decision").isin(
-            "delete", "delete_noexist"))
-            .select("url", F.col("ev_warc_ts").alias("warc_ts"),
-                    F.col("ev_lsn").alias("lsn"),
-                    F.lit(None).cast("binary").alias("html"),
-                    F.lit(None).cast("string").alias("text"),
-                    F.lit(None).cast("string").alias("lang"),
-                    F.lit(None).cast("binary").alias("content_fp"),
-                    F.lit(True).alias("deleted"),
-                    F.lit(None).cast(FP_CHUNK_SCHEMA).alias("chunks"),
-                    *[F.lit(None).cast(latest.schema[c].dataType).alias(c)
-                      for c in extras]))
-
-        out = content_rows.unionByName(del_rows, allowMissingColumns=True)
-        iu_urls = iu.select("url")
-        if cur_wide is not None:
-            # noop: current content; event metadata + extras advance
-            noop_meta = (decided.filter(F.col("decision") == "noop")
-                         .select("url", "ev_warc_ts", "ev_lsn",
-                                 *[f"ev_x_{c}" for c in extras]))
-            noop_rows = (cur_wide.join(self._bcast(noop_meta, n_winners),
-                                       "url", "inner")
-                         .withColumn("warc_ts", F.col("ev_warc_ts"))
-                         .withColumn("lsn", F.col("ev_lsn")))
-            for c in extras:
-                noop_rows = noop_rows.withColumn(c, F.col(f"ev_x_{c}"))
-            keep = list(dict.fromkeys(cur_wide.columns + extras))
-            noop_rows = noop_rows.select(*keep)
-            # carry: current rows not touched by an applied verdict
-            carry = cur_wide.join(
-                self._bcast(applied_urls.select("url"), n_winners),
-                "url", "left_anti")
-            out = (carry.unionByName(noop_rows, allowMissingColumns=True)
-                   .unionByName(out, allowMissingColumns=True))
-
-        return out, iu_urls
-
-    # ------------------------------------------------------- MoR row assembly
-
-    def _assemble_mor_meta(self, decided: DataFrame,
-                           cur_meta: DataFrame | None, extras: list[str],
-                           n_winners: int) -> DataFrame:
+    def _assemble_meta(self, decided: DataFrame, cur_meta: DataFrame | None,
+                       extras: list[str], n_winners: int) -> DataFrame:
         """Skinny meta for the dirty buckets, rebuilt from current meta +
         this batch's verdicts. All joins are broadcast on the verdict side
         (map-side); wide data is never touched here.
@@ -658,9 +524,9 @@ class CdcIngestJob:
                      if cur_meta is not None else {})
 
         def _extra_expr(c):
-            # COW parity per decision: insert/update/noop take the event
-            # value (old-only columns null out on insert/update but survive
-            # noop); delete nulls; carry/skip keep current.
+            # per decision: insert/update/noop take the event value
+            # (old-only columns null out on insert/update but survive noop);
+            # delete nulls; carry/skip keep current.
             null = F.lit(None).cast(ev_types.get(c) or cur_types.get(c))
             ev = F.col(f"ev_x_{c}") if c in extras else null
             cur = F.col(c) if c in old_extras else null
@@ -709,10 +575,10 @@ class CdcIngestJob:
             meta_rows = meta_rows.unionByName(p, allowMissingColumns=True)
         return meta_rows
 
-    def _mor_read_schema(self, wide_rows: DataFrame, meta_rows: DataFrame,
-                         extras: list[str]) -> str:
-        """Cumulative read-output schema (matches the COW lake's row shape):
-        wide content columns + deleted + prior epochs' extras + this batch's."""
+    def _read_schema(self, wide_rows: DataFrame, meta_rows: DataFrame,
+                     extras: list[str]) -> str:
+        """Cumulative read-output schema: wide content columns + deleted +
+        prior epochs' extras + this batch's."""
         from pyspark.sql.types import BooleanType, StructField, StructType
 
         ws = {f.name: f for f in wide_rows.schema.fields}
@@ -736,8 +602,7 @@ class CdcIngestJob:
 
     # ------------------------------------------------------------ chunk store
 
-    def _update_chunk_store(self, merge_files: list[str], iu_urls: DataFrame,
-                            n_winners: int, epoch: int):
+    def _update_chunk_store(self, merge_files: list[str], epoch: int):
         acc = self.rows_chunked_acc
         if epoch in self.chunk_store.committed_epochs():
             return 0, 0, 0, 0
@@ -756,17 +621,14 @@ class CdcIngestJob:
         written = self.lake.read_files(self.spark, merge_files)
         if written is None:
             self.chunk_store.append(
-                self.spark.createDataFrame(
-                    [], "chunk_hash binary, len long, first_seen_epoch long"),
+                self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
                 epoch)
             return 0, 0, 0, 0
-        # column-pruned: only (url, chunks) leave the parquet files; restrict
-        # to this epoch's freshly chunked rows (carry/noop chunks are already
-        # in the store from prior epochs)
-        chunked = (written.select("url", "chunks")
-                   .join(self._bcast(iu_urls, n_winners), "url", "left_semi"))
-        # one aggregation pass: per-hash (multiplicity, len)
-        uniq = (chunked.select(F.explode("chunks").alias("c"))
+        # column-pruned: only chunks leave the parquet files. The delta holds
+        # exactly this epoch's freshly chunked insert/update rows (no-op
+        # chunks are already in the store from prior epochs). One
+        # aggregation pass: per-hash (multiplicity, len)
+        uniq = (written.select(F.explode("chunks").alias("c"))
                 .groupBy(F.col("c.hash").alias("chunk_hash"))
                 .agg(F.count("*").alias("mult"), F.min("c.len").alias("len")))
         # observability mode: exact dedup stats + a globally-unique store
@@ -879,13 +741,11 @@ class CdcIngestJob:
         for ep, files in pending:
             df = self.lake.read_files(self.spark, files)
             if df is not None:
-                parts.append(df.select("url", "content_fp", "chunks",
-                                       F.lit(ep).alias("__ep")))
+                parts.append(df.select("chunks", F.lit(ep).alias("__ep")))
         epochs = [ep for ep, _ in pending]
         if not parts:
             self.chunk_store.append(
-                self.spark.createDataFrame(
-                    [], "chunk_hash binary, len long, first_seen_epoch long"),
+                self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
                 epochs, props={"deduped": False})
             self._pending_chunks = []
             return
@@ -900,45 +760,15 @@ class CdcIngestJob:
                  .agg(F.min("len").alias("len"),
                       F.min("first_seen_epoch").alias("first_seen_epoch")))
         self.chunk_store.append(delta, epochs, props={"deduped": False})
-        # Boundary-count histograms for every flushed epoch, over APPLIED
-        # rows (ADVICE r3 #2): COW merge files carry untouched rows of
-        # rewritten buckets and MoR deltas carry rode-along no-op rows, so
-        # a raw per-epoch count materially inflates the COW histogram vs
-        # observability mode's iu_urls semi-join. A row counts toward its
-        # epoch iff its content_fp DIFFERS from the url's previous in-window
-        # row (null-safe lag over epoch order) — carries and no-ops repeat
-        # the previous fp and collapse onto the epoch that applied the
-        # content, while a revert (A -> B -> A) still counts at its own
-        # epoch because B sits between (exactly the iu semantics; tombstones
-        # have null fp, so a re-insert after delete counts too). RESUMED
-        # replays seed the window with the lake's PRE-WINDOW state as epoch
-        # -1 (ADVICE r4 #1): without it, pre-window content that is only
-        # carried/no-op'd inside the window would be attributed to its
-        # first in-window epoch, diverging from observability mode. The lag
-        # runs over a SKINNY (url, epoch, fp) frame — chunk arrays never
-        # enter the window shuffle — and whole-replay flushes (the
-        # steady-state shape) have no pre-window snapshot, so the seed
-        # costs nothing there. Buffered so flush_metrics writes them with
-        # the lineage.
-        from pyspark.sql import Window
-
-        skinny = rows.select("url", "__ep", "content_fp")
-        seed = self._pre_window_fp(min(epochs),
-                                   skinny.select("url").distinct())
-        if seed is not None:
-            skinny = skinny.unionByName(
-                seed.withColumn("__ep", F.lit(-1)))
-        w = Window.partitionBy("url").orderBy("__ep")
-        keep = (skinny.withColumn("__prev_fp",
-                                  F.lag("content_fp").over(w))
-                .filter(F.col("__ep") >= 0)
-                .filter(~F.col("content_fp").eqNullSafe(F.col("__prev_fp")))
-                .select("url", "__ep"))
-        applied = rows.join(keep, ["url", "__ep"], "left_semi")
-        hist = (applied.select(F.explode("chunks").alias("c"), "__ep")
-                .groupBy(
-                    F.col("__ep").alias("epoch"),
-                    (F.floor(F.col("c.len") / self.HIST_BUCKET)
+        # Boundary-count histograms for every flushed epoch: every delta row
+        # is an applied insert/update (no-op recrawls are dropped before the
+        # delta write and tombstones never reach it), so each epoch's
+        # histogram is a plain count over its own delta — the same rows
+        # observability mode counts. Buffered so flush_metrics writes them
+        # with the lineage.
+        hist = (raw.groupBy(
+                    F.col("first_seen_epoch").alias("epoch"),
+                    (F.floor(F.col("len") / self.HIST_BUCKET)
                      * self.HIST_BUCKET).cast("long").alias("bucket"))
                 .agg(F.count("*").alias("cnt")).collect())
         by_epoch: dict[int, list] = {}
@@ -951,69 +781,6 @@ class CdcIngestJob:
         # cleared only AFTER the append commits — a transient failure above
         # leaves the buffer intact so a retried flush() still has the deltas
         self._pending_chunks = []
-
-    def _pre_window_fp(self, first_epoch: int, window_urls=None):
-        """Skinny (url, content_fp) lake state as of just before
-        ``first_epoch`` committed — the seed row-set for the flush
-        histogram's lag window on RESUMED replays (ADVICE r4 #1). Walks the
-        snapshot history to the newest snapshot predating the epoch; MoR
-        reads its skinny meta, COW a column-pruned (url, content_fp,
-        deleted) projection of its data files. Tombstones surface as null
-        fp, so an in-window re-insert still counts as applied.
-
-        The O(window), never O(store) flush invariant holds: only urls the
-        WINDOW touches can collapse a lag comparison, so the seed is (a)
-        bucket-pruned — the scan reads only the pre-snapshot files of the
-        window urls' buckets, hashed with THAT snapshot's persisted
-        n_buckets (a rebucket may sit between) — and (b) semi-joined down
-        to the window's url set before it ever reaches the window shuffle.
-        Returns None — zero cost — when no pre-window snapshot exists
-        (fresh lake: the whole-replay steady-state shape) or older
-        manifests were expired (then the first in-window row counts, the
-        pre-seeding behavior, disclosed here)."""
-        import json as _json
-        import os as _os
-
-        lake = self.lake
-        pre = None
-        # bound the walk at the CURRENT pointer (ADVICE r5 #4): a crash
-        # between the snapshot write and the CURRENT flip in _commit leaves
-        # an orphan v*.json above CURRENT — never-committed state that must
-        # not seed the histogram (maintenance repairs it later; until then
-        # it is invisible to readers and must stay invisible here)
-        cur = lake._current_version()
-        if cur is None:
-            return None
-        for v in lake.snapshot_versions():
-            if v > cur:
-                break
-            with open(_os.path.join(lake.path, "snapshots",
-                                    f"v{v:08d}.json")) as f:
-                snap = _json.load(f)
-            if first_epoch in snap["committed_epochs"]:
-                break
-            pre = snap
-        if pre is None:
-            return None
-        key = "meta_files" if getattr(lake, "MOR", False) else "files"
-        sel = pre.get(key, {})
-        pre_n = pre.get("n_buckets")
-        if pre_n and window_urls is not None:
-            dirty = {str(int(r.b)) for r in window_urls.select(
-                F.pmod(F.xxhash64(F.col("url")), F.lit(int(pre_n)))
-                .alias("b")).distinct().collect()}   # skinny: <= n_buckets rows
-            sel = {b: fl for b, fl in sel.items() if b in dirty}
-        df = lake.read_files(self.spark,
-                             [f for fl in sel.values() for f in fl])
-        if df is None:
-            return None
-        out = df.select(
-            "url",
-            F.when(F.col("deleted"), F.lit(None).cast("binary"))
-            .otherwise(F.col("content_fp")).alias("content_fp"))
-        if window_urls is not None:
-            out = out.join(window_urls, "url", "left_semi")
-        return out
 
     def flush(self) -> None:
         """End-of-replay flush for steady-state mode: chunk-store delta +
@@ -1075,11 +842,9 @@ class CdcIngestJob:
         written = self.lake.read_files(self.spark, files)
         if written is None:
             self.chunk_store.append(
-                self.spark.createDataFrame(
-                    [], "chunk_hash binary, len long, first_seen_epoch long"),
+                self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
                 epoch)
             return
-        # without the iu url list, dedup against the store covers carry rows
         uniq = (written.select(F.explode("chunks").alias("c"))
                 .groupBy(F.col("c.hash").alias("chunk_hash"))
                 .agg(F.min("c.len").alias("len")))

@@ -1,18 +1,20 @@
-"""BucketedLake — an Iceberg-style table: snapshot isolation, atomic commits,
-bucket-pruned MERGE, additive schema evolution, committed-epoch markers.
+"""Iceberg-style tables on parquet: snapshot isolation, atomic commits,
+bucket-pruned merge-on-read MERGE, additive schema evolution, committed-epoch
+markers.
 
 The sandbox has no Iceberg runtime jar, so the same semantics are implemented
 on parquet (SURVEY.md §7.4 keeps MERGE behind one sink interface; on a real
-cluster this class is swapped for `MERGE INTO iceberg.db.pages`):
+cluster ``MorBucketedLake`` is swapped for `MERGE INTO iceberg.db.pages`):
 
 - Data files are immutable parquet files assigned to url-hash buckets
   (pmod(xxhash64(url), n_buckets) — same layout as Iceberg `bucket(N, url)`).
 - A snapshot (JSON) lists the live files per bucket + the set of committed
   epochs; `CURRENT` is flipped by atomic os.replace — readers see either the
   old or the new snapshot, never a partial write (exactly-once commit point).
-- MERGE rewrites only *dirty* buckets (buckets containing changed urls); clean
-  buckets carry over by reference. At 100 TB this is the difference between
-  an O(table) rewrite and an O(delta) one.
+- MERGE appends wide content deltas and rewrites only the skinny metadata of
+  *dirty* buckets (buckets containing changed urls); clean buckets carry over
+  by reference. At 100 TB this is the difference between an O(table) rewrite
+  and an O(delta) one.
 - Schema evolution is additive: the snapshot stores the widest schema; readers
   unionByName(allowMissingColumns=True) so old files yield nulls for new
   columns (Iceberg metadata evolution equivalent).
@@ -28,50 +30,16 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
-class BucketedLake:
-    def __init__(self, path: str, key_col: str = "url", n_buckets: int = 32):
+class SnapshotTable:
+    """Manifest machinery shared by the lake and the append-only tables:
+    versioned JSON snapshots, a ``CURRENT`` pointer flipped atomically,
+    immutable data directories, and expiry of whatever no kept snapshot
+    references."""
+
+    def __init__(self, path: str):
         self.path = path
-        self.key_col = key_col
-        self.n_buckets = n_buckets
         os.makedirs(os.path.join(path, "data"), exist_ok=True)
         os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
-        # The bucket spec is TABLE metadata, not caller opinion (Iceberg
-        # partition-spec semantics): an existing lake's persisted count wins
-        # over the constructor arg — reopening a 32-bucket lake with
-        # n_buckets=64 would otherwise silently mis-route every key. New
-        # lakes record the ctor value at first commit; `rebucket()` is the
-        # only way to change it.
-        snap = self.current_snapshot()
-        persisted = snap.get("n_buckets")
-        if persisted is not None:
-            # mirror rebucket()'s new_n >= 1 check: a manifest carrying a
-            # nonsensical bucket count must fail loudly, not silently turn
-            # bucket_expr into pmod(x, 0) = null routing (ADVICE r4 #3)
-            if int(persisted) < 1:
-                raise ValueError(
-                    f"{path} persists n_buckets={persisted}; not a "
-                    f"bucketed-lake manifest (append-only table dir?)")
-            self.n_buckets = int(persisted)
-        # Lake MODE is table metadata too: opening a COW lake through the
-        # MoR class (or vice versa) reads the wrong file sets — harmless
-        # for reads (empty result) but catastrophic for maintenance ops
-        # (a mismatched rebucket would commit an empty rewrite over a
-        # non-empty snapshot). Fail loudly instead.
-        pmode = snap.get("mor")
-        mine = bool(getattr(self, "MOR", False))
-        if pmode is not None and bool(pmode) != mine:
-            raise ValueError(
-                f"{path} is a {'MoR' if pmode else 'COW'} lake; open it "
-                f"with {'MorBucketedLake' if pmode else 'BucketedLake'} "
-                f"(--mode {'mor' if pmode else 'cow'})")
-        # ctor-arg validation, same loudness as the manifest guard above:
-        # n_buckets < 1 makes bucket_expr pmod(x, 0) = null-route every row
-        # into a __HIVE_DEFAULT_PARTITION__ with no error. (AppendOnlyTable's
-        # inner lake bypasses __init__ via __new__, so this cannot fire
-        # for it.)
-        if self.n_buckets < 1:
-            raise ValueError(
-                f"n_buckets={self.n_buckets} must be >= 1 for {path}")
 
     # ------------------------------------------------------------- snapshots
 
@@ -93,14 +61,6 @@ class BucketedLake:
         return set(self.current_snapshot()["committed_epochs"])
 
     def _commit(self, snap: dict) -> None:
-        # bucket spec + lake mode are table metadata, stamped on every
-        # commit — but only for REAL bucketed lakes: AppendOnlyTable commits
-        # through a __new__-constructed inner lake with n_buckets=0, and
-        # persisting that 0 would poison any later adoption of the manifest
-        # as a BucketedLake (ADVICE r4 #3)
-        if self.n_buckets >= 1:
-            snap["n_buckets"] = self.n_buckets
-            snap["mor"] = bool(getattr(self, "MOR", False))
         name = f"v{snap['version']:08d}.json"
         with open(os.path.join(self.path, "snapshots", name), "w") as f:
             json.dump(snap, f)
@@ -111,27 +71,25 @@ class BucketedLake:
 
     # ----------------------------------------------------------------- reads
 
-    def read(self, spark: SparkSession, buckets: list[int] | None = None
-             ) -> DataFrame | None:
-        """Current table state; `buckets` prunes to the named buckets only."""
-        snap = self.current_snapshot()
-        files: list[str] = []
-        sel = snap["files"]
-        if buckets is not None:
-            sel = {str(b): sel.get(str(b), []) for b in buckets}
-        for fl in sel.values():
-            files.extend(fl)
-        schema = self._schema_from_json(snap["schema"])
-        if not files:
-            if schema is None:
-                return None
-            return spark.createDataFrame([], schema)
+    def read_files(self, spark: SparkSession, rel_files: list[str]
+                   ) -> DataFrame | None:
+        if not rel_files:
+            return None
+        return spark.read.parquet(
+            *[os.path.join(self.path, "data", f) for f in rel_files])
+
+    def _read_parquet(self, spark: SparkSession, rel_files: list[str],
+                      schema) -> DataFrame | None:
+        """mergeSchema read of ``rel_files``, widened and reordered to the
+        table ``schema`` (additive evolution); empty/None with no files."""
+        if not rel_files:
+            return spark.createDataFrame([], schema) if schema else None
         df = (spark.read.option("mergeSchema", "true")
-              .parquet(*[os.path.join(self.path, "data", f) for f in files]))
+              .parquet(*[os.path.join(self.path, "data", f)
+                         for f in rel_files]))
         if schema is not None:
             empty = spark.createDataFrame([], schema)
             df = df.unionByName(empty, allowMissingColumns=True)
-            # reorder/extend to the table schema (additive evolution)
             df = df.select(*[F.col(c) for c in empty.columns])
         return df
 
@@ -141,56 +99,6 @@ class BucketedLake:
             return None
         from pyspark.sql.types import StructType
         return StructType.fromJson(json.loads(sj))
-
-    # ---------------------------------------------------------------- writes
-
-    def bucket_expr(self):
-        return F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets))
-
-    def overwrite_buckets(self, df: DataFrame, dirty_buckets: list[int],
-                          epoch: int, stats: dict | None = None) -> list[str]:
-        """MERGE commit: replace the named buckets with df's rows, atomically.
-
-        df must contain only rows whose bucket is in dirty_buckets. Rows are
-        written one parquet directory per bucket so later reads prune cleanly.
-        Returns the relative paths written this merge (also recorded in the
-        snapshot stats as ``merge_files`` for crash repair of derived tables).
-        """
-        snap = self.current_snapshot()
-        new_files = dict(snap["files"])
-        token = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
-        staged = df.withColumn("__bucket", self.bucket_expr())
-        out_dir = os.path.join(self.path, "data", f"merge-{token}")
-        (staged.repartition(max(1, len(dirty_buckets)), "__bucket")
-               .write.partitionBy("__bucket").mode("overwrite").parquet(out_dir))
-        written = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith("__bucket="):
-                b = int(entry.split("=", 1)[1])
-                written[b] = [f"merge-{token}/{entry}"]
-        for b in dirty_buckets:
-            new_files[str(b)] = written.get(b, [])   # empty bucket -> no files
-        merge_files = [f for fl in written.values() for f in fl]
-        stats = dict(stats or {})
-        schema = stats.pop("__schema", snap["schema"])
-        stats["merge_files"] = merge_files
-        snap2 = {
-            "version": snap["version"] + 1,
-            "files": new_files,
-            "committed_epochs": sorted(set(snap["committed_epochs"]) | {epoch}),
-            "schema": schema,
-            "stats": {**snap.get("stats", {}), str(epoch): stats},
-            "ts": time.time(),
-        }
-        self._commit(snap2)
-        return merge_files
-
-    def read_files(self, spark: SparkSession, rel_files: list[str]
-                   ) -> DataFrame | None:
-        if not rel_files:
-            return None
-        return spark.read.parquet(
-            *[os.path.join(self.path, "data", f) for f in rel_files])
 
     # ------------------------------------------------------- maintenance
 
@@ -209,83 +117,6 @@ class BucketedLake:
             if entry.startswith("v") and entry.endswith(".json"):
                 out.append(int(entry[1:-5]))
         return out
-
-    def read_version(self, spark: SparkSession, version: int
-                     ) -> DataFrame | None:
-        """Time travel: read the table as of a specific snapshot version."""
-        with open(os.path.join(self.path, "snapshots",
-                               f"v{version:08d}.json")) as f:
-            snap = json.load(f)
-        files = [f for fl in snap["files"].values() for f in fl]
-        schema = self._schema_from_json(snap["schema"])
-        if not files:
-            return spark.createDataFrame([], schema) if schema else None
-        df = (spark.read.option("mergeSchema", "true")
-              .parquet(*[os.path.join(self.path, "data", f) for f in files]))
-        if schema is not None:
-            empty = spark.createDataFrame([], schema)
-            df = df.unionByName(empty, allowMissingColumns=True)
-            df = df.select(*[F.col(c) for c in empty.columns])
-        return df
-
-    def compact(self, spark: SparkSession, target_files_per_bucket: int = 1
-                ) -> int:
-        """Rewrite buckets whose file count exceeds the target into one file
-        each; commits a new snapshot (no logical change). Returns number of
-        buckets compacted."""
-        snap = self.current_snapshot()
-        over = [int(b) for b, fl in snap["files"].items()
-                if len(fl) > target_files_per_bucket]
-        if not over:
-            return 0
-        df = self.read(spark, buckets=over)
-        token = f"compact-{uuid.uuid4().hex[:8]}"
-        out_dir = os.path.join(self.path, "data", f"merge-{token}")
-        staged = df.withColumn("__bucket", self.bucket_expr())
-        (staged.repartition(len(over), "__bucket")
-               .write.partitionBy("__bucket").mode("overwrite").parquet(out_dir))
-        new_files = dict(snap["files"])
-        for entry in os.listdir(out_dir):
-            if entry.startswith("__bucket="):
-                b = int(entry.split("=", 1)[1])
-                new_files[str(b)] = [f"merge-{token}/{entry}"]
-        self._commit({**snap, "version": snap["version"] + 1,
-                      "files": new_files, "ts": time.time()})
-        return len(over)
-
-    def rebucket(self, spark: SparkSession, new_n: int) -> int:
-        """Partition-spec evolution: rewrite the table under
-        ``pmod(xxhash64(key), new_n)`` and commit a snapshot carrying the
-        new spec (VERDICT r3 missing #1 — at 10^10 events 32 buckets is far
-        too coarse, and without this op a 100x operator would rebuild the
-        lake by hand). Committed epochs, schema, and stats carry over;
-        subsequent epochs' dirty-bucket sets use the new spec (bucket_expr
-        reads self.n_buckets, and reopening adopts the persisted value).
-        One full-table rewrite — a maintenance op, amortized over the
-        epochs it saves, exactly like Iceberg's spec-evolution rewrite.
-        Returns the previous bucket count. Old data dirs become unreferenced
-        and are collected by expire_snapshots."""
-        if new_n < 1:
-            raise ValueError(f"new_n must be >= 1, got {new_n}")
-        snap = self.current_snapshot()
-        if new_n == self.n_buckets:
-            return self.n_buckets
-        df = self.read(spark)
-        old_n, self.n_buckets = self.n_buckets, new_n
-        new_files: dict[str, list[str]] = {}
-        if df is not None:
-            token = f"rebucket-{uuid.uuid4().hex[:8]}"
-            out_dir = os.path.join(self.path, "data", f"merge-{token}")
-            (df.withColumn("__bucket", self.bucket_expr())
-             .repartition(new_n, "__bucket")
-             .write.partitionBy("__bucket").mode("overwrite").parquet(out_dir))
-            for entry in os.listdir(out_dir):
-                if entry.startswith("__bucket="):
-                    b = entry.split("=", 1)[1]
-                    new_files[b] = [f"merge-{token}/{entry}"]
-        self._commit({**snap, "version": snap["version"] + 1,
-                      "files": new_files, "ts": time.time()})
-        return old_n
 
     def expire_snapshots(self, keep_last: int = 2) -> int:
         """Drop old snapshot manifests and any data file no kept snapshot
@@ -331,26 +162,15 @@ class BucketedLake:
                                        f"v{v:08d}.json"))
         return removed
 
-    def init_schema(self, schema_ddl: str) -> None:
-        snap = self.current_snapshot()
-        if snap["schema"] is None:
-            snap = {**snap, "version": snap["version"] + 1, "schema": schema_ddl}
-            self._commit(snap)
 
-    def evolve_schema(self, schema_ddl: str) -> None:
-        """Additive evolution: record the widened schema in table metadata."""
-        snap = self.current_snapshot()
-        snap = {**snap, "version": snap["version"] + 1, "schema": schema_ddl}
-        self._commit(snap)
+class MorBucketedLake(SnapshotTable):
+    """Merge-on-read bucketed lake (Iceberg MoR equivalent) — the engine's
+    sink.
 
-
-class MorBucketedLake(BucketedLake):
-    """Merge-on-read variant (Iceberg MoR equivalent) of the bucketed lake.
-
-    The COW lake rewrites every dirty bucket's WIDE rows each MERGE — at a
-    Common-Crawl change rate that is an O(table) html rewrite per epoch, and
-    it is exactly the bandwidth-bound stage that dominates replay time. MoR
-    splits the table:
+    A copy-on-write lake rewrites every dirty bucket's WIDE rows each MERGE
+    — at a Common-Crawl change rate that is an O(table) html rewrite per
+    epoch, exactly the bandwidth-bound stage that dominates replay time.
+    This lake splits the table instead:
 
     - **meta (skinny, copy-on-write)**: one row per url — current
       (warc_ts, lsn), a content pointer (content_ts, content_lsn) naming the
@@ -364,16 +184,54 @@ class MorBucketedLake(BucketedLake):
     Reads reconstruct current rows by joining wide deltas to the meta
     pointers (url, content_ts, content_lsn) — the classic MoR read
     amplification, bounded by `compact()`, which folds a bucket's deltas
-    into one file. Snapshot/commit/expire/time-travel machinery is inherited
-    unchanged: one manifest lists both file sets, and the atomic CURRENT
+    into one file. One manifest lists both file sets, and the atomic CURRENT
     flip commits them together (exactly-once).
     """
 
-    MOR = True
-    #: wide delta schema (content rows only; warc_ts/lsn here are the CONTENT
-    #: version keys the meta pointer references)
-    WIDE_COLS = ["url", "warc_ts", "lsn", "html", "text", "lang",
-                 "content_fp", "chunks"]
+    def __init__(self, path: str, key_col: str = "url", n_buckets: int = 32):
+        super().__init__(path)
+        self.key_col = key_col
+        self.n_buckets = n_buckets
+        # The bucket spec is TABLE metadata, not caller opinion (Iceberg
+        # partition-spec semantics): an existing lake's persisted count wins
+        # over the constructor arg — reopening a 32-bucket lake with
+        # n_buckets=64 would otherwise silently mis-route every key. New
+        # lakes record the ctor value at first commit; `rebucket()` is the
+        # only way to change it.
+        snap = self.current_snapshot()
+        persisted = snap.get("n_buckets")
+        if persisted is not None:
+            # mirror rebucket()'s new_n >= 1 check: a manifest carrying a
+            # nonsensical bucket count must fail loudly, not silently turn
+            # bucket_expr into pmod(x, 0) = null routing (ADVICE r4 #3)
+            if int(persisted) < 1:
+                raise ValueError(
+                    f"{path} persists n_buckets={persisted}; not a "
+                    f"bucketed-lake manifest (append-only table dir?)")
+            self.n_buckets = int(persisted)
+        # The lake mode is table metadata too. A copy-on-write lake lists
+        # wide rows with no skinny meta: read here it would look empty, and
+        # a rebucket would commit an empty rewrite over a non-empty
+        # snapshot. That sink is retired, so its manifests are refused.
+        if snap.get("mor") is not None and not snap["mor"]:
+            raise ValueError(
+                f"{path} is a copy-on-write lake; COW lakes are no longer "
+                f"supported (replay the WAL into a new lake)")
+        # ctor-arg validation, same loudness as the manifest guard above:
+        # n_buckets < 1 makes bucket_expr pmod(x, 0) = null-route every row
+        # into a __HIVE_DEFAULT_PARTITION__ with no error
+        if self.n_buckets < 1:
+            raise ValueError(
+                f"n_buckets={self.n_buckets} must be >= 1 for {path}")
+
+    def _commit(self, snap: dict) -> None:
+        # bucket spec + lake mode are table metadata, stamped on every commit
+        snap["n_buckets"] = self.n_buckets
+        snap["mor"] = True
+        super()._commit(snap)
+
+    def bucket_expr(self):
+        return F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets))
 
     # ------------------------------------------------------------------ meta
 
@@ -384,19 +242,9 @@ class MorBucketedLake(BucketedLake):
         sel = snap.get("meta_files", {})
         if buckets is not None:
             sel = {str(b): sel.get(str(b), []) for b in buckets}
-        files = [f for fl in sel.values() for f in fl]
-        schema = self._schema_from_json(snap.get("meta_schema"))
-        if not files:
-            if schema is None:
-                return None
-            return spark.createDataFrame([], schema)
-        df = (spark.read.option("mergeSchema", "true")
-              .parquet(*[os.path.join(self.path, "data", f) for f in files]))
-        if schema is not None:
-            empty = spark.createDataFrame([], schema)
-            df = df.unionByName(empty, allowMissingColumns=True)
-            df = df.select(*[F.col(c) for c in empty.columns])
-        return df
+        return self._read_parquet(
+            spark, [f for fl in sel.values() for f in fl],
+            self._schema_from_json(snap.get("meta_schema")))
 
     # ----------------------------------------------------------------- write
 
@@ -465,20 +313,13 @@ class MorBucketedLake(BucketedLake):
         })
         return written
 
-    def merge_delta(self, wide_rows: DataFrame, meta_rows: DataFrame,
-                    dirty_buckets: list[int], epoch: int,
-                    stats: dict | None = None) -> list[str]:
-        """Convenience: write + commit in one call (two-job MoR MERGE)."""
-        written = self.write_delta(wide_rows, dirty_buckets, epoch)
-        return self.commit_delta(written, meta_rows, dirty_buckets, epoch,
-                                 stats)
-
     # ------------------------------------------------------------------ read
 
     def read(self, spark: SparkSession, buckets: list[int] | None = None
              ) -> DataFrame | None:
         """Reconstruct current rows: wide deltas ⋈ meta content pointers,
-        plus tombstone rows rebuilt from meta (output schema == COW read)."""
+        plus tombstone rows rebuilt from meta (one row per url, content
+        columns + ``deleted`` + evolved extras)."""
         return self._read_snapshot(spark, self.current_snapshot(), buckets)
 
     def _read_snapshot(self, spark: SparkSession, snap: dict,
@@ -493,22 +334,12 @@ class MorBucketedLake(BucketedLake):
         schema = self._schema_from_json(snap["schema"])
         if not mfiles:
             return spark.createDataFrame([], schema) if schema else None
-        meta = (spark.read.option("mergeSchema", "true")
-                .parquet(*[os.path.join(self.path, "data", f) for f in mfiles]))
-        mschema = self._schema_from_json(snap.get("meta_schema"))
-        if mschema is not None:
-            empty = spark.createDataFrame([], mschema)
-            meta = meta.unionByName(empty, allowMissingColumns=True)
-            meta = meta.select(*[F.col(c) for c in empty.columns])
+        meta = self._read_parquet(
+            spark, mfiles, self._schema_from_json(snap.get("meta_schema")))
         extras = [c for c in meta.columns if c not in {
             "url", "warc_ts", "lsn", "content_ts", "content_lsn",
             "content_fp", "deleted"}]
-        if files:
-            wide = (spark.read.option("mergeSchema", "true")
-                    .parquet(*[os.path.join(self.path, "data", f)
-                               for f in files]))
-        else:
-            wide = None
+        wide = self._read_parquet(spark, files, None)
         live_meta = meta.filter(~F.col("deleted"))
         parts = []
         if wide is not None:
@@ -602,10 +433,19 @@ class MorBucketedLake(BucketedLake):
         return len(over)
 
     def rebucket(self, spark: SparkSession, new_n: int) -> int:
-        """MoR spec evolution: one rewrite of BOTH file sets under the new
-        spec — live wide content (folded like compact, content version keys
-        preserved so meta pointers stay valid) and the skinny meta — in a
-        single snapshot flip. See BucketedLake.rebucket."""
+        """Partition-spec evolution: rewrite the table under
+        ``pmod(xxhash64(key), new_n)`` and commit a snapshot carrying the
+        new spec (VERDICT r3 missing #1 — at 10^10 events 32 buckets is far
+        too coarse). BOTH file sets are rewritten in a single snapshot flip:
+        live wide content (folded like compact, content version keys
+        preserved so meta pointers stay valid) and the skinny meta.
+        Committed epochs, schema, and stats carry over; subsequent epochs'
+        dirty-bucket sets use the new spec (bucket_expr reads
+        self.n_buckets, and reopening adopts the persisted value). One
+        full-table rewrite — a maintenance op, amortized over the epochs it
+        saves, exactly like Iceberg's spec-evolution rewrite. Returns the
+        previous bucket count. Old data dirs become unreferenced and are
+        collected by expire_snapshots."""
         if new_n < 1:
             raise ValueError(f"new_n must be >= 1, got {new_n}")
         snap = self.current_snapshot()
@@ -643,25 +483,12 @@ class MorBucketedLake(BucketedLake):
         return old_n
 
 
-class AppendOnlyTable:
+class AppendOnlyTable(SnapshotTable):
     """Append-only parquet table with atomic per-epoch commits (chunk store,
     metrics). An epoch's files become visible only via the manifest flip, and
-    re-appending a committed epoch is a no-op — idempotent under replay."""
-
-    def __init__(self, path: str):
-        self.path = path
-        os.makedirs(os.path.join(path, "data"), exist_ok=True)
-        os.makedirs(os.path.join(path, "snapshots"), exist_ok=True)
-        self._lake = BucketedLake.__new__(BucketedLake)
-        self._lake.path = path
-        self._lake.key_col = ""
-        self._lake.n_buckets = 0
-
-    def current_snapshot(self) -> dict:
-        return self._lake.current_snapshot()
-
-    def committed_epochs(self) -> set[int]:
-        return self._lake.committed_epochs()
+    re-appending a committed epoch is a no-op — idempotent under replay.
+    ``expire_snapshots()`` collects the append dirs superseded by
+    ``ChunkStore.compact()`` (VERDICT r3 #8)."""
 
     def append(self, df: DataFrame, epoch: int | list[int],
                props: dict | None = None) -> None:
@@ -689,7 +516,7 @@ class AppendOnlyTable:
                 merged["deduped"] = (old_props.get("deduped", True)
                                      and props.get("deduped", True))
             old_props = merged
-        self._lake._commit({
+        self._commit({
             "version": snap["version"] + 1,
             "files": files,
             "committed_epochs": sorted(set(snap["committed_epochs"])
@@ -704,16 +531,11 @@ class AppendOnlyTable:
         """Table manifest properties (e.g. the `deduped` store-mode flag)."""
         return dict(self.current_snapshot().get("props", {}))
 
-    def expire_snapshots(self, keep_last: int = 2) -> int:
-        """Drop old manifests and any data directory no kept snapshot
-        references — the cleanup that collects append dirs superseded by
-        ``ChunkStore.compact()`` (VERDICT r3 #8). Same crash-orphan-safe
-        logic as the lake's expire (the manifest format is shared).
-        Returns the number of data directories removed."""
-        return self._lake.expire_snapshots(keep_last=keep_last)
-
     def read(self, spark: SparkSession) -> DataFrame | None:
-        return self._lake.read(spark)
+        snap = self.current_snapshot()
+        return self._read_parquet(
+            spark, [f for fl in snap["files"].values() for f in fl],
+            self._schema_from_json(snap["schema"]))
 
 
 class ChunkStore(AppendOnlyTable):
@@ -756,7 +578,7 @@ class ChunkStore(AppendOnlyTable):
             os.path.join(self.path, "data", rel))
         props = dict(snap.get("props", {}))
         props["deduped"] = True
-        self._lake._commit({**snap, "version": snap["version"] + 1,
-                            "files": {"0": [rel]}, "props": props,
-                            "ts": time.time()})
+        self._commit({**snap, "version": snap["version"] + 1,
+                      "files": {"0": [rel]}, "props": props,
+                      "ts": time.time()})
         return len(files)

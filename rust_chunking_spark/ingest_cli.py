@@ -6,13 +6,13 @@ against a WAL directory of epoch-numbered parquet segments, at N or 4N
 executors. Locally:
 
   python -m rust_chunking_spark.ingest_cli --wal WAL_DIR --lake LAKE_DIR \\
-      [--mode mor|cow] [--algo super] [--buckets 32] [--epochs 0 1 2] \\
+      [--algo super] [--buckets 32] [--epochs 0 1 2] \\
       [--stream] [--salt-lww] [--cpus 8]
 
 Batch mode replays the requested epochs (default: every epoch on disk)
-through the exactly-once merge; already-committed epochs are skipped
-(resume-from-checkpoint). --stream drives the same engine through
-Structured Streaming's foreachBatch with availableNow semantics.
+through the exactly-once merge into the merge-on-read lake; already-committed
+epochs are skipped (resume-from-checkpoint). --stream drives the same engine
+through Structured Streaming's foreachBatch with availableNow semantics.
 """
 
 from __future__ import annotations
@@ -28,7 +28,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="WAL dir (epoch=NNNNNN/ segments); optional when "
                          "only maintenance flags are given")
     ap.add_argument("--lake", required=True, help="lake root directory")
-    ap.add_argument("--mode", choices=("mor", "cow"), default="mor")
     ap.add_argument("--algo", default="super",
                     choices=["super", "ae", "ram", "rabin", "seq", "ultra", "leap"])
     ap.add_argument("--buckets", type=int, default=32)
@@ -63,14 +62,13 @@ def main(argv: list[str] | None = None) -> int:
                  "(--rebucket/--compact-lake/--compact-store/--expire) "
                  "is given")
 
-    from .engine import BucketedLake, CdcIngestJob, ChunkStore, MorBucketedLake
+    from .engine import CdcIngestJob, ChunkStore, MorBucketedLake
     from .engine.lake import AppendOnlyTable
     from .session import get_spark
     from .sources.wal import WalSource
 
     spark = get_spark(app_name="cdc-ingest", cpus=args.cpus or None)
-    lake_cls = MorBucketedLake if args.mode == "mor" else BucketedLake
-    lake = lake_cls(f"{args.lake}/lake", n_buckets=args.buckets)
+    lake = MorBucketedLake(f"{args.lake}/lake", n_buckets=args.buckets)
     job = CdcIngestJob(spark, lake,
                        ChunkStore(f"{args.lake}/chunks"),
                        AppendOnlyTable(f"{args.lake}/metrics"),
@@ -128,7 +126,6 @@ def main(argv: list[str] | None = None) -> int:
             }))
         print(json.dumps({
             "committed_epochs": sorted(lake.committed_epochs()),
-            "mode": args.mode,
         }))
         return 0
     finally:

@@ -27,17 +27,16 @@ def _r5_like_result(n_queries: int = 49, n_errors: int = 0) -> dict:
         "section_seconds": {
             "kernels_pass1": 4.3, "wal_gen": 0.0, "scaling": 1651.1,
             "full_leg": 155.4, "queries": 67.6, "streaming": 348.2,
-            "lake_compare": 180.0, "scaling_2to8": 903.3,
+            "scaling_2to8": 903.3,
             "kernels_pass2": 3.8, "kernel_scaling": 1.6,
         },
-        "skipped": [{"section": "lake_compare", "est_seconds": 292.7,
+        "skipped": [{"section": "scaling_extra_draw", "est_seconds": 292.7,
                      "remaining_seconds": 170.2}],
         "kernels_mb_s": {"ae": 27.9, "ram": 33.3, "rabin": 88.9,
                          "seq": 25.6, "super": 92.1, "ultra": 37.9,
                          "leap": 52.2},
         "replay_events": 1700000,
         "value_cores": 32,
-        "lake_mode": "mor",
         "scaling": {
             "cores_n": 1, "cores_4n": 4, "tput_n": 2855.6,
             "tput_4n": 9875.1, "seconds_n": 595.32, "seconds_4n": 172.15,
@@ -53,8 +52,6 @@ def _r5_like_result(n_queries: int = 49, n_errors: int = 0) -> dict:
                          "tput_4n": 16767.4, "efficiency": 0.759,
                          "samples_n": [5524.3, 5373.8],
                          "samples_4n": [14203.1, 16767.4], "pinned": True},
-        "lake_compare": {"mor_4c": 9875.1, "cow_4c": 4200.0,
-                         "draws_other": 2, "draws_default": 2},
         "kernel_scaling": {"procs_n": 1, "procs_4n": 4, "mb_s_n": 77.7,
                            "mb_s_4n": 316.5, "efficiency": 1.018},
     }
@@ -74,9 +71,8 @@ def test_summary_fits_driver_window_with_full_r5_shape():
     assert parsed["scaling"]["efficiency"] == 0.865
     assert parsed["streaming"]["stream_over_batch"] == 1.08
     assert parsed["scaling_2to8"]["efficiency"] == 0.759
-    assert parsed["lake_compare"]["cow_4c"] == 4200.0
     assert parsed["kernel_scaling"]["efficiency"] == 1.018
-    assert parsed["skipped"] == ["lake_compare"]
+    assert parsed["skipped"] == ["scaling_extra_draw"]
     # the two things that blew the r5 line past the window must be gone
     assert "queries" not in parsed
     assert "samples_n" not in parsed["scaling"]

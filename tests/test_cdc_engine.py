@@ -14,7 +14,7 @@ from rust_chunking_spark.datagen import (
     extract_text,
     generate_wal,
 )
-from rust_chunking_spark.engine import BucketedLake, CdcIngestJob
+from rust_chunking_spark.engine import CdcIngestJob, MorBucketedLake
 from rust_chunking_spark.engine.lake import AppendOnlyTable
 
 N_EPOCHS = 6
@@ -35,7 +35,7 @@ def _write_wal(spark, wal, path):
 
 
 def _mk_job(spark, tmp, algo="super"):
-    lake = BucketedLake(f"{tmp}/lake", n_buckets=8)
+    lake = MorBucketedLake(f"{tmp}/lake", n_buckets=8)
     store = AppendOnlyTable(f"{tmp}/chunks")
     metrics = AppendOnlyTable(f"{tmp}/metrics")
     return CdcIngestJob(spark, lake, store, metrics, algo=algo)
@@ -182,7 +182,6 @@ def test_engine_supercdc_record_seeding(spark, tmp_path):
 
     import numpy as np
 
-    from rust_chunking_spark.engine import MorBucketedLake
     from rust_chunking_spark.functions.chunking import extract_super_records
     from rust_chunking_spark.kernels import vectorized as V
 
@@ -247,7 +246,7 @@ def test_chunk_len_histogram_in_metrics_both_modes(spark, wal, tmp_path):
     # steady-state mode: histograms computed once at flush, per epoch
     from rust_chunking_spark.engine import ChunkStore
 
-    lake2 = BucketedLake(str(tmp_path / "ss/lake"), n_buckets=8)
+    lake2 = MorBucketedLake(str(tmp_path / "ss/lake"), n_buckets=8)
     job2 = CdcIngestJob(spark, lake2,
                         ChunkStore(str(tmp_path / "ss/chunks")),
                         AppendOnlyTable(str(tmp_path / "ss/metrics")),

@@ -3,15 +3,18 @@
 Simulated failure points:
 1. after the lake snapshot commit but BEFORE the chunk-store append
    (run() must repair the store from merge_files recorded in the snapshot);
-2. mid-merge before the snapshot flip (CURRENT still points at the old
-   snapshot; replay reconverges, orphaned data files are ignored).
+2. after the delta and meta writes but before the snapshot flip (CURRENT
+   still points at the old snapshot; replay reconverges, orphaned data
+   files are ignored);
+3. after the delta write but before the commit (orphan deltas stay
+   invisible and expire collects them).
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from rust_chunking_spark.datagen import expected_final_state, generate_wal
-from rust_chunking_spark.engine import BucketedLake, CdcIngestJob
+from rust_chunking_spark.engine import CdcIngestJob, MorBucketedLake
 from rust_chunking_spark.engine.lake import AppendOnlyTable
 
 N_EPOCHS = 3
@@ -30,7 +33,7 @@ def _write_wal(spark, wal, path):
 
 
 def _mk(spark, tmp):
-    lake = BucketedLake(f"{tmp}/lake", n_buckets=4)
+    lake = MorBucketedLake(f"{tmp}/lake", n_buckets=4)
     return CdcIngestJob(spark, lake, AppendOnlyTable(f"{tmp}/chunks"),
                         AppendOnlyTable(f"{tmp}/metrics"))
 
@@ -40,8 +43,6 @@ def test_crash_between_lake_commit_and_store_append(spark, wal, tmp_path):
     job = _mk(spark, str(tmp_path))
 
     # crash injection: chunk-store append raises AFTER the lake committed
-    orig = job._update_chunk_store
-
     def boom(*a, **k):
         raise RuntimeError("injected crash")
 
@@ -106,18 +107,11 @@ def test_crash_before_snapshot_flip(spark, wal, tmp_path):
         assert bytes(rows[url].html) == exp["html"]
 
 
-def _mk_mor(spark, tmp):
-    from rust_chunking_spark.engine.lake import MorBucketedLake
-
-    lake = MorBucketedLake(f"{tmp}/lake", n_buckets=4)
-    return CdcIngestJob(spark, lake, AppendOnlyTable(f"{tmp}/chunks"),
-                        AppendOnlyTable(f"{tmp}/metrics"))
-
-
 def test_mor_crash_between_commit_and_store_append(spark, wal, tmp_path):
-    """MoR: lake committed, chunk-store append crashed -> repair on resume."""
+    """Lake committed, chunk-store append crashed -> repair on resume, with
+    the live chunk hashes all present in the store."""
     _write_wal(spark, wal, f"{tmp_path}/wal")
-    job = _mk_mor(spark, str(tmp_path))
+    job = _mk(spark, str(tmp_path))
     job._update_chunk_store = lambda *a, **k: (_ for _ in ()).throw(
         RuntimeError("injected crash"))
     with pytest.raises(RuntimeError):
@@ -125,7 +119,7 @@ def test_mor_crash_between_commit_and_store_append(spark, wal, tmp_path):
     assert 0 in job.lake.committed_epochs()
     assert 0 not in job.chunk_store.committed_epochs()
 
-    job2 = _mk_mor(spark, str(tmp_path))
+    job2 = _mk(spark, str(tmp_path))
     results = job2.run(f"{tmp_path}/wal", list(range(N_EPOCHS)))
     assert [m.epoch for m in results] == [1, 2]
     assert job2.chunk_store.committed_epochs() == {0, 1, 2}
@@ -143,12 +137,12 @@ def test_mor_crash_between_commit_and_store_append(spark, wal, tmp_path):
 
 
 def test_mor_crash_between_delta_write_and_commit(spark, wal, tmp_path):
-    """MoR: wide delta files written, snapshot commit crashed -> files stay
+    """Wide delta files written, snapshot commit crashed -> files stay
     orphans (invisible), replay reconverges, expire collects the orphans."""
     import os
 
     _write_wal(spark, wal, f"{tmp_path}/wal")
-    job = _mk_mor(spark, str(tmp_path))
+    job = _mk(spark, str(tmp_path))
     job.run(f"{tmp_path}/wal", [0])
     v1 = job.lake.current_snapshot()["version"]
 
@@ -162,7 +156,7 @@ def test_mor_crash_between_delta_write_and_commit(spark, wal, tmp_path):
     assert job.lake.committed_epochs() == {0}
     n_dirs_after_crash = len(os.listdir(f"{tmp_path}/lake/data"))
 
-    job2 = _mk_mor(spark, str(tmp_path))
+    job2 = _mk(spark, str(tmp_path))
     results = job2.run(f"{tmp_path}/wal", list(range(N_EPOCHS)))
     assert [m.epoch for m in results] == [1, 2]
     oracle = expected_final_state(wal)

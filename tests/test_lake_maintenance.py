@@ -3,7 +3,7 @@
 from pyspark.sql import functions as F
 
 from rust_chunking_spark.datagen import generate_wal
-from rust_chunking_spark.engine import BucketedLake, CdcIngestJob
+from rust_chunking_spark.engine import CdcIngestJob, MorBucketedLake
 from rust_chunking_spark.engine.lake import AppendOnlyTable
 
 
@@ -12,7 +12,7 @@ def _replayed(spark, tmp_path, epochs=3):
     for ep, events in enumerate(wal):
         spark.createDataFrame([dict(e) for e in events]).write.mode(
             "overwrite").parquet(f"{tmp_path}/wal/epoch={ep:06d}")
-    lake = BucketedLake(str(tmp_path / "lake"), n_buckets=4)
+    lake = MorBucketedLake(str(tmp_path / "lake"), n_buckets=4)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(str(tmp_path / "chunks")),
                        AppendOnlyTable(str(tmp_path / "metrics")))
     job.run(f"{tmp_path}/wal", list(range(epochs)))
@@ -94,76 +94,72 @@ def _state(spark, lake):
         for r in lake.read(spark).filter(~F.col("deleted")).collect())
 
 
-def _mk_job(spark, tmp_path, lake_cls, tag, n_buckets=32):
-    lake = lake_cls(f"{tmp_path}/{tag}/lake", n_buckets=n_buckets)
+def _mk_job(spark, tmp_path, tag, n_buckets=32):
+    lake = MorBucketedLake(f"{tmp_path}/{tag}/lake", n_buckets=n_buckets)
     return lake, CdcIngestJob(
         spark, lake, AppendOnlyTable(f"{tmp_path}/{tag}/chunks"),
         AppendOnlyTable(f"{tmp_path}/{tag}/metrics"))
 
 
-def test_rebucket_mid_replay_both_modes(spark, tmp_path):
+def test_rebucket_mid_replay(spark, tmp_path):
     """Bucket-count evolution (VERDICT r3 missing #1): ingest at 32 buckets,
     rebucket to 128 mid-replay, ingest more epochs — final state identical
     to an un-rebucketed run, committed epochs/schema carried, and the
     post-rebucket epochs' dirty-bucket sets follow the NEW spec (including
     through a fresh lake handle, which must adopt the persisted count over
     its constructor arg)."""
-    from rust_chunking_spark.engine.lake import MorBucketedLake
-
     wal = _wal_to_disk(spark, tmp_path)
     half = 3
-    for mode, lake_cls in (("mor", MorBucketedLake), ("cow", BucketedLake)):
-        lake, job = _mk_job(spark, tmp_path, lake_cls, f"{mode}-re")
-        job.run(f"{tmp_path}/wal", list(range(half)))
-        assert lake.rebucket(spark, 128) == 32
-        assert lake.n_buckets == 128
-        assert lake.committed_epochs() == set(range(half))
-        # post-rebucket epochs through a FRESH handle with a stale ctor arg:
-        # the persisted spec must win, or every key mis-routes
-        lake2, job2 = _mk_job(spark, tmp_path, lake_cls, f"{mode}-re",
-                              n_buckets=32)
-        assert lake2.n_buckets == 128
-        job2.run(f"{tmp_path}/wal", list(range(half, len(wal))))
-        # dirty buckets of the new epochs follow the new spec
-        stats = lake2.current_snapshot()["stats"]
-        new_buckets = {
-            int(f.split("__bucket=", 1)[1].split("/", 1)[0])
-            for ep in range(half, len(wal))
-            for f in stats[str(ep)]["merge_files"]}
-        assert max(new_buckets) > 31, new_buckets
+    lake, job = _mk_job(spark, tmp_path, "re")
+    job.run(f"{tmp_path}/wal", list(range(half)))
+    assert lake.rebucket(spark, 128) == 32
+    assert lake.n_buckets == 128
+    assert lake.committed_epochs() == set(range(half))
+    # post-rebucket epochs through a FRESH handle with a stale ctor arg:
+    # the persisted spec must win, or every key mis-routes
+    lake2, job2 = _mk_job(spark, tmp_path, "re", n_buckets=32)
+    assert lake2.n_buckets == 128
+    job2.run(f"{tmp_path}/wal", list(range(half, len(wal))))
+    # dirty buckets of the new epochs follow the new spec
+    stats = lake2.current_snapshot()["stats"]
+    new_buckets = {
+        int(f.split("__bucket=", 1)[1].split("/", 1)[0])
+        for ep in range(half, len(wal))
+        for f in stats[str(ep)]["merge_files"]}
+    assert max(new_buckets) > 31, new_buckets
 
-        baseline, base_job = _mk_job(spark, tmp_path, lake_cls,
-                                     f"{mode}-base")
-        base_job.run(f"{tmp_path}/wal", list(range(len(wal))))
-        assert _state(spark, lake2) == _state(spark, baseline)
-        # old data dirs become unreferenced and are GC'd by expire
-        lake2.expire_snapshots(keep_last=1)
-        assert _state(spark, lake2) == _state(spark, baseline)
+    baseline, base_job = _mk_job(spark, tmp_path, "base")
+    base_job.run(f"{tmp_path}/wal", list(range(len(wal))))
+    assert _state(spark, lake2) == _state(spark, baseline)
+    # old data dirs become unreferenced and are GC'd by expire
+    lake2.expire_snapshots(keep_last=1)
+    assert _state(spark, lake2) == _state(spark, baseline)
 
 
-def test_lake_mode_is_persisted_metadata(spark, tmp_path):
-    """Opening a COW lake through the MoR class (or vice versa) must fail
-    loudly: mode is table metadata like the bucket spec. A mismatched handle
-    used to read empty — and a mismatched rebucket would have committed an
-    empty rewrite over a non-empty snapshot (code-review r4 finding #1)."""
-    import pytest as _pytest
+def test_lake_mode_is_persisted_metadata(tmp_path):
+    """Lake mode is table metadata like the bucket spec. Copy-on-write lakes
+    (manifest stamped ``"mor": false``) are no longer supported and must be
+    refused on open: read through the merge-on-read class they would look
+    empty, and a rebucket would commit an empty rewrite over a non-empty
+    snapshot (code-review r4 finding #1). MoR manifests still open."""
+    import json
+    import os
 
-    from rust_chunking_spark.engine.lake import MorBucketedLake
+    import pytest
 
-    lake = _replayed(spark, tmp_path)           # COW with commits
-    with _pytest.raises(ValueError, match="COW lake"):
-        MorBucketedLake(lake.path)
+    def plant(path, mor):
+        os.makedirs(f"{path}/snapshots")
+        with open(f"{path}/snapshots/v00000001.json", "w") as f:
+            json.dump({"version": 1, "files": {"0": ["merge-x/__bucket=0"]},
+                       "committed_epochs": [0], "schema": None, "stats": {},
+                       "n_buckets": 4, "mor": mor}, f)
+        with open(f"{path}/snapshots/CURRENT", "w") as f:
+            f.write("v00000001.json")
 
-    mor = MorBucketedLake(str(tmp_path / "mor"), n_buckets=4)
-    mor.merge_delta(
-        spark.createDataFrame(
-            [], "url string, warc_ts timestamp, lsn long, html binary, "
-                "text string, lang string, content_fp binary, "
-                "chunks array<struct<hash:binary,len:long>>"),
-        spark.createDataFrame(
-            [], "url string, warc_ts timestamp, lsn long, "
-                "content_ts timestamp, content_lsn long, "
-                "content_fp binary, deleted boolean"),
-        [], 0)
-    with _pytest.raises(ValueError, match="MoR lake"):
-        BucketedLake(str(tmp_path / "mor"))
+    plant(tmp_path / "cow", False)
+    with pytest.raises(ValueError, match="COW lakes are no longer supported"):
+        MorBucketedLake(str(tmp_path / "cow"))
+
+    plant(tmp_path / "mor", True)
+    lake = MorBucketedLake(str(tmp_path / "mor"), n_buckets=8)
+    assert lake.n_buckets == 4 and lake.committed_epochs() == {0}

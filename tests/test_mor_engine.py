@@ -1,14 +1,12 @@
-"""Merge-on-read lake: same CDC semantics as COW, O(changed bytes) ingest IO.
-
-Every check here runs THROUGH the same oracle as the COW engine tests — the
-MoR lake must be observationally identical on reads while writing only wide
-deltas per epoch.
+"""Merge-on-read lake: CDC semantics through the same oracle as the engine
+tests in test_cdc_engine.py, writing only wide deltas per epoch; steady-state
+vs observability-mode metrics parity; chunk-store maintenance.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
-from rust_chunking_spark.datagen import expected_final_state, generate_wal
+from rust_chunking_spark.datagen import generate_wal
 from rust_chunking_spark.engine import CdcIngestJob
 from rust_chunking_spark.engine.lake import AppendOnlyTable, MorBucketedLake
 
@@ -19,6 +17,9 @@ from tests.test_cdc_engine import (
 
 N_EPOCHS = 6
 EVENTS_PER_EPOCH = 60
+# The parity tests below keep the lake mode in their ids; merge-on-read is
+# the only mode the engine has.
+LAKE_MODES = ["mor"]
 
 
 @pytest.fixture(scope="module")
@@ -136,30 +137,6 @@ def test_mor_reinsert_after_delete_identical_content(spark, tmp_path):
     assert rows[0].chunks is not None and len(rows[0].chunks) > 0
 
 
-def test_mor_matches_cow_final_state(spark, wal, tmp_path):
-    """COW and MoR replays of the same WAL read back identically."""
-    from rust_chunking_spark.engine import BucketedLake
-
-    _write_wal(spark, wal, str(tmp_path / "wal"))
-    cow = CdcIngestJob(spark, BucketedLake(f"{tmp_path}/cowlake", n_buckets=8),
-                       AppendOnlyTable(f"{tmp_path}/cowchunks"),
-                       AppendOnlyTable(f"{tmp_path}/cowmetrics"))
-    cow.run(str(tmp_path / "wal"), list(range(N_EPOCHS)))
-    mor = _mk_mor_job(spark, str(tmp_path))
-    mor.run(str(tmp_path / "wal"), list(range(N_EPOCHS)))
-    a = cow.lake.read(spark)
-    b = mor.lake.read(spark)
-    assert sorted(a.columns) == sorted(b.columns)
-    cols = [c for c in a.columns if c != "chunks"]
-    a2, b2 = a.select(cols), b.select(cols)
-    assert a2.exceptAll(b2).count() == 0
-    assert b2.exceptAll(a2).count() == 0
-    # chunk stores agree too
-    ca = cow.chunk_store.read(spark).select("chunk_hash")
-    cb = mor.chunk_store.read(spark).select("chunk_hash")
-    assert ca.exceptAll(cb).count() == 0 and cb.exceptAll(ca).count() == 0
-
-
 def test_mor_expire_keeps_live_meta(spark, wal, tmp_path):
     """expire_snapshots must treat meta directories as live references
     (regression: the live set was computed from wide files only)."""
@@ -255,23 +232,19 @@ VERDICT_FIELDS = ("events_seen", "applied_insert", "applied_update",
                   "skipped_duplicate")
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", LAKE_MODES)
 def test_metrics_mode_parity_collect_vs_steady(spark, wal, tmp_path, mode):
     """collect_metrics=True and =False must commit IDENTICAL metrics-table
     rows — per-(bucket, decision) lineage AND chunk-length histograms — and
     identical per-epoch verdict fields, on the same WAL (ADVICE r3 #3).
     Histogram parity additionally proves the steady-state flush counts
-    APPLIED rows, not written rows: COW merge files carry untouched rows of
-    rewritten buckets and MoR deltas carry no-op rows, both excluded by the
-    first-in-window (url, content_fp) attribution (ADVICE r3 #2)."""
-    from rust_chunking_spark.engine.lake import BucketedLake
-
-    lake_cls = MorBucketedLake if mode == "mor" else BucketedLake
+    APPLIED rows only (ADVICE r3 #2): no-op recrawls never reach the delta
+    it counts."""
     _write_wal(spark, wal, str(tmp_path / "wal"))
     jobs = {}
     for tag, collect in (("obs", True), ("steady", False)):
         job = CdcIngestJob(
-            spark, lake_cls(f"{tmp_path}/{tag}/lake", n_buckets=8),
+            spark, MorBucketedLake(f"{tmp_path}/{tag}/lake", n_buckets=8),
             AppendOnlyTable(f"{tmp_path}/{tag}/chunks"),
             AppendOnlyTable(f"{tmp_path}/{tag}/metrics"),
             collect_metrics=collect)
@@ -283,10 +256,9 @@ def test_metrics_mode_parity_collect_vs_steady(spark, wal, tmp_path, mode):
             assert getattr(ma, f) == getattr(mb, f), (ma.epoch, f)
     assert (_metric_rows(spark, f"{tmp_path}/obs/metrics")
             == _metric_rows(spark, f"{tmp_path}/steady/metrics"))
-    if mode == "mor":
-        # below the observe bound, steady state must NOT have run the
-        # dedicated lineage action (the 3-actions/epoch throughput shape)
-        assert "decide_collect" not in jobs["steady"][0].last_phase_timings
+    # below the observe bound, steady state must NOT have run the
+    # dedicated lineage action (the 3-actions/epoch throughput shape)
+    assert "decide_collect" not in jobs["steady"][0].last_phase_timings
 
 
 def test_steady_lineage_bounded_above_obs_bucket_limit(spark, tmp_path):
@@ -366,18 +338,41 @@ def test_chunk_store_expire_collects_compacted_orphans(spark, wal, tmp_path):
     assert store.props().get("deduped") is True
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+def _write_epochs(spark, wal_dir, epochs, schema=None):
+    for ep, events in enumerate(epochs):
+        spark.createDataFrame(events, schema).write.mode(
+            "overwrite").parquet(f"{wal_dir}/epoch={ep:06d}")
+
+
+def _hist_rows(spark, path):
+    return [r for r in _metric_rows(spark, path) if r[1] == "chunk_len_hist"]
+
+
+def _obs_vs_steady(spark, tmp_path, wal_dir, epochs, n_buckets):
+    """Replay ``epochs`` once per metrics mode (one flush window each);
+    returns the (observability, steady-state) metrics-table rows."""
+    rows = {}
+    for tag, collect in (("obs", True), ("steady", False)):
+        job = CdcIngestJob(
+            spark, MorBucketedLake(f"{tmp_path}/{tag}/lake",
+                                   n_buckets=n_buckets),
+            AppendOnlyTable(f"{tmp_path}/{tag}/chunks"),
+            AppendOnlyTable(f"{tmp_path}/{tag}/metrics"),
+            collect_metrics=collect)
+        job.run(wal_dir, epochs)
+        job.flush()
+        rows[tag] = _metric_rows(spark, f"{tmp_path}/{tag}/metrics")
+    return rows["obs"], rows["steady"]
+
+
+@pytest.mark.parametrize("mode", LAKE_MODES)
 def test_flush_histogram_parity_on_resumed_replay(spark, tmp_path, mode):
     """ADVICE r4 #1: a RESUMED replay (epochs 0-1 flushed by one job, 2-3
     by a second) must produce the same per-epoch flush histograms as
-    observability mode. The second window's first epoch carries/no-ops
-    pre-window content (COW carry rows, MoR rode-alongs, a literal no-op
-    re-crawl); without the epoch -1 pre-window seed those rows inflate
-    epoch 2. Includes a post-resume revert and a same-fp re-crawl so the
-    seed must carry REAL fps, not just url presence."""
+    observability mode. The second window's first epoch is a literal no-op
+    re-crawl of pre-window content (must not count) and its last a revert
+    to pre-window content (must count)."""
     import datetime as dt
-
-    from rust_chunking_spark.engine.lake import BucketedLake
 
     t = lambda m: dt.datetime(2026, 3, 1) + dt.timedelta(minutes=m)
     A = b"<html>first content body AAAA</html>" * 8
@@ -389,26 +384,22 @@ def test_flush_histogram_parity_on_resumed_replay(spark, tmp_path, mode):
          dict(url="u2", warc_ts=t(1), lsn=2, op="I", html=Z, text="z", lang="en")],
         [dict(url="u1", warc_ts=t(10), lsn=3, op="U", html=B, text="b", lang="en")],
         # window 2 (resume): u2 re-crawled with UNCHANGED content (no-op —
-        # must not count), u1 untouched (carry in u2's bucket rewrite)
+        # must not count)
         [dict(url="u2", warc_ts=t(20), lsn=4, op="U", html=Z, text="z", lang="en")],
-        # window 2: revert u1 to pre-window content A (must count: B is
-        # its previous fp, which only the seeded lag can know)
+        # window 2: revert u1 to pre-window content A (must count)
         [dict(url="u1", warc_ts=t(30), lsn=5, op="U", html=A, text="a", lang="en")],
     ]
     wal_dir = str(tmp_path / "wal")
-    for ep, events in enumerate(epochs):
-        spark.createDataFrame(events).write.mode("overwrite").parquet(
-            f"{wal_dir}/epoch={ep:06d}")
+    _write_epochs(spark, wal_dir, epochs)
 
-    lake_cls = MorBucketedLake if mode == "mor" else BucketedLake
     obs = CdcIngestJob(
-        spark, lake_cls(f"{tmp_path}/obs/lake", n_buckets=2),
+        spark, MorBucketedLake(f"{tmp_path}/obs/lake", n_buckets=2),
         AppendOnlyTable(f"{tmp_path}/obs/chunks"),
         AppendOnlyTable(f"{tmp_path}/obs/metrics"), collect_metrics=True)
     obs.run(wal_dir, [0, 1, 2, 3])
 
     mk = lambda: CdcIngestJob(
-        spark, lake_cls(f"{tmp_path}/ss/lake", n_buckets=2),
+        spark, MorBucketedLake(f"{tmp_path}/ss/lake", n_buckets=2),
         AppendOnlyTable(f"{tmp_path}/ss/chunks"),
         AppendOnlyTable(f"{tmp_path}/ss/metrics"), collect_metrics=False)
     j1 = mk()
@@ -418,30 +409,24 @@ def test_flush_histogram_parity_on_resumed_replay(spark, tmp_path, mode):
     j2.run(wal_dir, [2, 3])
     j2.flush()
 
-    obs_h = [r for r in _metric_rows(spark, f"{tmp_path}/obs/metrics")
-             if r[1] == "chunk_len_hist"]
-    ss_h = [r for r in _metric_rows(spark, f"{tmp_path}/ss/metrics")
-            if r[1] == "chunk_len_hist"]
-    assert ss_h == obs_h
+    ss_h = _hist_rows(spark, f"{tmp_path}/ss/metrics")
+    assert ss_h == _hist_rows(spark, f"{tmp_path}/obs/metrics")
     # and the histogram epochs are exactly the content-applying ones
     assert {e for e, *_ in ss_h} == {0, 1, 3}
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", LAKE_MODES)
 def test_flush_histogram_ignores_orphan_snapshot(spark, tmp_path, mode):
     """ADVICE r5 #4: a crash between _commit's snapshot write and the
     CURRENT flip leaves an orphan v*.json ABOVE the CURRENT pointer —
-    never-committed state. The resumed-replay histogram seed walk must
-    bound at CURRENT: here the orphan is a stale copy of the epoch-0 state
-    (u1 = content A), and picking it as the pre-window seed would make the
-    window's revert-to-A look like a no-op, silently dropping that epoch's
-    histogram mass."""
+    never-committed state that a resumed flush must not read. Here the
+    orphan is a stale copy of the epoch-0 state (u1 = content A); a flush
+    that consulted it would take the window's revert-to-A for a no-op and
+    silently drop that epoch's histogram mass."""
     import datetime as dt
     import json
     import os
     import shutil
-
-    from rust_chunking_spark.engine.lake import BucketedLake
 
     t = lambda m: dt.datetime(2026, 3, 1) + dt.timedelta(minutes=m)
     A = b"<html>first content body AAAA</html>" * 8
@@ -451,25 +436,21 @@ def test_flush_histogram_ignores_orphan_snapshot(spark, tmp_path, mode):
               lang="en")],
         [dict(url="u1", warc_ts=t(10), lsn=2, op="U", html=B, text="b",
               lang="en")],
-        # window 2 (resume): revert to pre-window content A — applied, and
-        # only a TRUE pre-window seed (u1 = B) can know that
+        # window 2 (resume): revert to pre-window content A — applied
         [dict(url="u1", warc_ts=t(20), lsn=3, op="U", html=A, text="a",
               lang="en")],
     ]
     wal_dir = str(tmp_path / "wal")
-    for ep, events in enumerate(epochs):
-        spark.createDataFrame(events).write.mode("overwrite").parquet(
-            f"{wal_dir}/epoch={ep:06d}")
+    _write_epochs(spark, wal_dir, epochs)
 
-    lake_cls = MorBucketedLake if mode == "mor" else BucketedLake
     obs = CdcIngestJob(
-        spark, lake_cls(f"{tmp_path}/obs/lake", n_buckets=2),
+        spark, MorBucketedLake(f"{tmp_path}/obs/lake", n_buckets=2),
         AppendOnlyTable(f"{tmp_path}/obs/chunks"),
         AppendOnlyTable(f"{tmp_path}/obs/metrics"), collect_metrics=True)
     obs.run(wal_dir, [0, 1, 2])
 
     mk = lambda: CdcIngestJob(
-        spark, lake_cls(f"{tmp_path}/ss/lake", n_buckets=2),
+        spark, MorBucketedLake(f"{tmp_path}/ss/lake", n_buckets=2),
         AppendOnlyTable(f"{tmp_path}/ss/chunks"),
         AppendOnlyTable(f"{tmp_path}/ss/metrics"), collect_metrics=False)
     j1 = mk()
@@ -495,15 +476,12 @@ def test_flush_histogram_ignores_orphan_snapshot(spark, tmp_path, mode):
     j2.run(wal_dir, [2])
     j2.flush()
 
-    obs_h = [r for r in _metric_rows(spark, f"{tmp_path}/obs/metrics")
-             if r[1] == "chunk_len_hist"]
-    ss_h = [r for r in _metric_rows(spark, f"{tmp_path}/ss/metrics")
-            if r[1] == "chunk_len_hist"]
-    assert ss_h == obs_h
+    ss_h = _hist_rows(spark, f"{tmp_path}/ss/metrics")
+    assert ss_h == _hist_rows(spark, f"{tmp_path}/obs/metrics")
     assert {e for e, *_ in ss_h} == {0, 1, 2}   # the revert epoch counted
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("mode", LAKE_MODES)
 def test_flush_histogram_counts_reverted_content(spark, tmp_path, mode):
     """A revert (content A -> B -> A across three epochs) is an APPLIED
     update in its own epoch; the steady-state flush histogram must count it
@@ -512,8 +490,6 @@ def test_flush_histogram_counts_reverted_content(spark, tmp_path, mode):
     the url's previous version) must still be excluded. Exact parity with
     observability mode is the oracle."""
     import datetime as dt
-
-    from rust_chunking_spark.engine.lake import BucketedLake
 
     t = lambda m: dt.datetime(2026, 2, 1) + dt.timedelta(minutes=m)
     A = b"<html>content A body with some bytes</html>" * 8
@@ -527,23 +503,35 @@ def test_flush_histogram_counts_reverted_content(spark, tmp_path, mode):
         [dict(url="u1", warc_ts=t(20), lsn=5, op="U", html=A, text="a", lang="en")],  # revert
     ]
     wal_dir = str(tmp_path / "wal")
-    for ep, events in enumerate(epochs):
-        spark.createDataFrame(events).write.mode("overwrite").parquet(
-            f"{wal_dir}/epoch={ep:06d}")
-
-    lake_cls = MorBucketedLake if mode == "mor" else BucketedLake
-    rows = {}
-    for tag, collect in (("obs", True), ("steady", False)):
-        job = CdcIngestJob(
-            spark, lake_cls(f"{tmp_path}/{mode}-{tag}/lake", n_buckets=4),
-            AppendOnlyTable(f"{tmp_path}/{mode}-{tag}/chunks"),
-            AppendOnlyTable(f"{tmp_path}/{mode}-{tag}/metrics"),
-            collect_metrics=collect)
-        job.run(wal_dir, [0, 1, 2, 3])
-        job.flush()
-        rows[tag] = _metric_rows(spark, f"{tmp_path}/{mode}-{tag}/metrics")
-    assert rows["steady"] == rows["obs"]
+    _write_epochs(spark, wal_dir, epochs)
+    obs, steady = _obs_vs_steady(spark, tmp_path, wal_dir, [0, 1, 2, 3],
+                                 n_buckets=4)
+    assert steady == obs
     # revert epoch (3) has histogram mass; noop-only epoch (2) has none
-    hist_epochs = {e for e, d, _, _ in rows["steady"]
-                   if d == "chunk_len_hist"}
-    assert hist_epochs == {0, 1, 3}
+    assert {e for e, d, _, _ in steady if d == "chunk_len_hist"} == {0, 1, 3}
+
+
+def test_flush_histogram_counts_reinsert_after_delete(spark, tmp_path):
+    """Delete, then re-insert of IDENTICAL content, inside one flush window:
+    the re-insert is an applied insert in its own epoch, so steady state
+    must write that epoch's chunk-length histogram exactly as
+    observability mode does. Deltas hold no tombstones, so an attribution
+    that compares a url's delta rows across epochs sees A -> A and drops
+    the re-insert."""
+    import datetime as dt
+
+    t = lambda m: dt.datetime(2026, 3, 1) + dt.timedelta(minutes=m)
+    A = b"<html>same bytes before and after the delete</html>" * 8
+    schema = ("url string, warc_ts timestamp, lsn long, op string, "
+              "html binary, text string, lang string")
+    epochs = [
+        [("u1", t(0), 1, "I", A, "a", "en")],
+        [("u1", t(10), 2, "D", None, None, "en")],
+        [("u1", t(20), 3, "I", A, "a", "en")],
+    ]
+    wal_dir = str(tmp_path / "wal")
+    _write_epochs(spark, wal_dir, epochs, schema)
+    obs, steady = _obs_vs_steady(spark, tmp_path, wal_dir, [0, 1, 2],
+                                 n_buckets=2)
+    assert steady == obs
+    assert {e for e, d, _, _ in steady if d == "chunk_len_hist"} == {0, 2}

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rust_chunking_spark.datagen import generate_wal
-from rust_chunking_spark.engine import BucketedLake, CdcIngestJob
+from rust_chunking_spark.engine import CdcIngestJob, MorBucketedLake
 from rust_chunking_spark.engine.lake import AppendOnlyTable
 from rust_chunking_spark.plans.inspect import (
     assert_broadcast_join,
@@ -42,7 +42,7 @@ def small_job(spark, tmp_path):
     for ep, events in enumerate(wal):
         spark.createDataFrame([dict(e) for e in events]).write.mode(
             "overwrite").parquet(f"{tmp_path}/wal/epoch={ep:06d}")
-    lake = BucketedLake(str(tmp_path / "lake"), n_buckets=4)
+    lake = MorBucketedLake(str(tmp_path / "lake"), n_buckets=4)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(str(tmp_path / "chunks")),
                        AppendOnlyTable(str(tmp_path / "metrics")))
     job.run(str(tmp_path / "wal"), [0])
@@ -50,16 +50,23 @@ def small_job(spark, tmp_path):
 
 
 def test_merge_decision_join_is_column_pruned(spark, small_job):
-    """The decision path must not read html/text from the lake files."""
+    """The decision join reads skinny columns only: the lake side is the
+    meta table (read_meta), and no scan in the plan — lake or event side —
+    reads html/text."""
     job, wal = small_job
     events = spark.read.parquet(f"{wal}/epoch=000001")
     latest, keys, _, _ = job._lww_latest(events)
-    cur = job.lake.read(spark)
-    cur_meta = cur.select("url", "warc_ts", "lsn", "content_fp", "deleted")
-    plan_schemas = scan_read_schemas(cur_meta)
+    ev_pre = latest.select(
+        "url", F.col("warc_ts").alias("ev_warc_ts"),
+        F.col("lsn").alias("ev_lsn"), F.col("op").alias("ev_op"))
+    pre = job._join_cur(ev_pre, job.lake.read_meta(spark)).withColumn(
+        "pre_decision", job._pre_decision_expr())
+    plan_schemas = scan_read_schemas(pre)
+    assert any("content_fp" in s for s in plan_schemas), plan_schemas
     for s in plan_schemas:
         cols = {c.split(":")[0] for c in s.split(",") if c}
         assert "html" not in cols and "text" not in cols, s
+    keys.unpersist()
 
 
 def test_mor_content_filter_evaluates_udf_once(spark):
@@ -102,37 +109,6 @@ def test_lww_shuffles_skinny_only(spark, small_job):
         assert "html" not in line, line
     # winners join back via broadcast
     assert_broadcast_join(latest)
-    keys.unpersist()
-
-
-def test_epoch_apply_has_bounded_wide_shuffles(spark, small_job):
-    """Row assembly: content/carry/noop paths join via broadcast, and the only
-    hash shuffles operate on skinny columns."""
-    job, wal = small_job
-    events = spark.read.parquet(f"{wal}/epoch=000001")
-    latest, keys, _, _ = job._lww_latest(events)
-    from pyspark.sql import functions as F
-    from rust_chunking_spark.functions.chunking import sha3_256_udf
-    ev_meta = latest.select(
-        "url", F.col("warc_ts").alias("ev_warc_ts"),
-        F.col("lsn").alias("ev_lsn"), F.col("op").alias("ev_op"),
-        sha3_256_udf(F.col("html")).alias("ev_fp"))
-    cur = job.lake.read(spark)
-    cur_meta = cur.select(
-        "url", F.col("warc_ts").alias("cur_warc_ts"),
-        F.col("lsn").alias("cur_lsn"), F.col("content_fp").alias("cur_fp"),
-        F.col("deleted").alias("cur_deleted"), F.lit(True).alias("cur_exists"))
-    decided = (ev_meta.join(cur_meta, "url", "left")
-               .withColumn("cur_exists",
-                           F.coalesce(F.col("cur_exists"), F.lit(False)))
-               .withColumn("decision", job._decision_expr()))
-    new_rows, iu = job._assemble_rows(latest, decided, cur, 30, [])
-    plan = explain_str(new_rows)
-    import re
-    wide_shuffles = [m.group(0) for m in
-                     re.finditer(r"Exchange hashpartitioning[^\n]*", plan)
-                     if "html" in m.group(0)]
-    assert not wide_shuffles, wide_shuffles
     keys.unpersist()
 
 

@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rust_chunking_spark.datagen import expected_final_state, generate_wal
-from rust_chunking_spark.engine import BucketedLake, CdcIngestJob
+from rust_chunking_spark.engine import CdcIngestJob, MorBucketedLake
 from rust_chunking_spark.engine.lake import AppendOnlyTable
 from rust_chunking_spark.streaming import start_stream_ingest
 
@@ -23,7 +23,7 @@ def test_stream_ingest_matches_oracle(spark, wal, tmp_path):
         df = spark.createDataFrame([dict(e) for e in events])
         df.write.mode("overwrite").parquet(f"{wal_dir}/epoch={ep:06d}")
 
-    lake = BucketedLake(str(tmp_path / "lake"), n_buckets=8)
+    lake = MorBucketedLake(str(tmp_path / "lake"), n_buckets=8)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(str(tmp_path / "chunks")),
                        AppendOnlyTable(str(tmp_path / "metrics")))
     q = start_stream_ingest(spark, job, wal_dir, str(tmp_path / "ckpt"),
@@ -58,7 +58,7 @@ def test_stream_epoch_split_across_microbatches(spark, wal, tmp_path):
         (df.repartition(6).write.mode("overwrite")
          .parquet(f"{wal_dir}/epoch={ep:06d}"))
 
-    lake = BucketedLake(str(tmp_path / "lake"), n_buckets=8)
+    lake = MorBucketedLake(str(tmp_path / "lake"), n_buckets=8)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(str(tmp_path / "chunks")),
                        AppendOnlyTable(str(tmp_path / "metrics")))
     q = start_stream_ingest(spark, job, wal_dir, str(tmp_path / "ckpt"),
@@ -78,9 +78,8 @@ def test_stream_epoch_split_across_microbatches(spark, wal, tmp_path):
 
 
 def test_stream_ingest_into_mor_lake(spark, wal, tmp_path):
-    """The streaming front-end is lake-agnostic: same oracle match on MoR."""
-    from rust_chunking_spark.engine.lake import MorBucketedLake
-
+    """The streaming front-end into the merge-on-read lake: one pass over
+    the WAL, oracle match on text and lsn."""
     wal_dir = str(tmp_path / "wal")
     for ep, events in enumerate(wal):
         df = spark.createDataFrame([dict(e) for e in events])
@@ -121,7 +120,7 @@ def test_stream_sweep_applies_epochs_without_success_markers(spark, wal,
     for m in glob.glob(f"{wal_dir}/epoch=*/_SUCCESS"):
         os.remove(m)
 
-    lake = BucketedLake(str(tmp_path / "lake"), n_buckets=8)
+    lake = MorBucketedLake(str(tmp_path / "lake"), n_buckets=8)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(str(tmp_path / "chunks")),
                        AppendOnlyTable(str(tmp_path / "metrics")))
     q = start_stream_ingest(spark, job, wal_dir, str(tmp_path / "ckpt"),
@@ -154,7 +153,7 @@ def test_stream_repairs_chunk_store_after_partial_crash(spark, wal, tmp_path):
         df = spark.createDataFrame([dict(e) for e in events])
         df.write.mode("overwrite").parquet(f"{wal_dir}/epoch={ep:06d}")
 
-    lake = BucketedLake(str(tmp_path / "lake"), n_buckets=8)
+    lake = MorBucketedLake(str(tmp_path / "lake"), n_buckets=8)
     job = CdcIngestJob(spark, lake, AppendOnlyTable(str(tmp_path / "chunks")),
                        AppendOnlyTable(str(tmp_path / "metrics")))
     q = start_stream_ingest(spark, job, wal_dir, str(tmp_path / "ckpt"),
@@ -194,7 +193,6 @@ def test_stream_cli_drains_tail_epoch_without_success(spark, wal, tmp_path,
     import os
 
     from rust_chunking_spark import ingest_cli
-    from rust_chunking_spark.engine import BucketedLake
 
     wal_dir = str(tmp_path / "wal")
     for ep, events in enumerate(wal):
@@ -206,9 +204,9 @@ def test_stream_cli_drains_tail_epoch_without_success(spark, wal, tmp_path,
     # keep the shared test session alive through main()'s finally-stop
     monkeypatch.setattr(spark, "stop", lambda: None)
     rc = ingest_cli.main(["--wal", wal_dir, "--lake", str(tmp_path / "lk"),
-                          "--mode", "cow", "--buckets", "8", "--stream"])
+                          "--buckets", "8", "--stream"])
     assert rc == 0
-    lake = BucketedLake(str(tmp_path / "lk" / "lake"), n_buckets=8)
+    lake = MorBucketedLake(str(tmp_path / "lk" / "lake"), n_buckets=8)
     assert lake.committed_epochs() == set(range(N_EPOCHS))
     out = capsys.readouterr().out
     assert f'"drained_epochs": [{N_EPOCHS - 1}]' in out
@@ -225,7 +223,6 @@ def test_cli_maintenance_flags(spark, wal, tmp_path, monkeypatch, capsys):
     oracle, the persisted bucket spec survives a stale-ctor reopen, and
     expiry reclaims superseded data dirs."""
     from rust_chunking_spark import ingest_cli
-    from rust_chunking_spark.engine.lake import MorBucketedLake
 
     wal_dir = str(tmp_path / "wal")
     for ep, events in enumerate(wal):

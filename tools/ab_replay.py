@@ -8,7 +8,7 @@ Usage:
       --wal /dev/shm/bench-wal2-100000-800000-2500-3 --pairs 3 --cpus 4
 
 Each leg is `bench.py --replay` run FROM its tree's directory with the
-same WAL, pinned to the same top cpu ids (taskset), same lake mode. The
+same WAL, pinned to the same top cpu ids (taskset). The
 protocol is the one the round-5 seq-kernel revert used: never compare
 numbers from different windows on this host (BENCH.md host-noise log).
 """
@@ -24,10 +24,9 @@ import time
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
-def leg(tree: str, wal: str, events: int, cpus: int, lake: str) -> dict:
+def leg(tree: str, wal: str, events: int, cpus: int) -> dict:
     cmd = [sys.executable, os.path.join(tree, "bench.py"), "--replay",
-           "--cpus", str(cpus), "--wal-dir", wal, "--events", str(events),
-           "--lake", lake]
+           "--cpus", str(cpus), "--wal-dir", wal, "--events", str(events)]
     if shutil.which("taskset") and cpus < CPUS:
         lo, hi = CPUS - cpus, CPUS - 1
         cmd = ["taskset", "-c", f"{lo}-{hi}" if cpus > 1 else str(hi)] + cmd
@@ -53,14 +52,13 @@ def main():
     ap.add_argument("--wal", required=True)
     ap.add_argument("--pairs", type=int, default=3)
     ap.add_argument("--cpus", type=int, default=4)
-    ap.add_argument("--lake", default="mor")
     args = ap.parse_args()
 
     events = int(open(os.path.join(args.wal, "_DONE")).read())
     out = {"a": [], "b": [], "events": events, "cpus": args.cpus}
     for i in range(args.pairs):
         for side, tree in (("a", args.tree_a), ("b", args.tree_b)):
-            r = leg(tree, args.wal, events, args.cpus, args.lake)
+            r = leg(tree, args.wal, events, args.cpus)
             out[side].append(round(r["events_per_sec"], 1))
             print(f"pair {i} side {side} ({tree}): "
                   f"{r['events_per_sec']:.1f} ev/s ({r['seconds']:.1f}s)",

@@ -10,7 +10,7 @@ Produces, under --out (default dist/):
 Cluster usage:
   spark-submit --master <cluster> \
       --py-files dist/rust_chunking_spark.zip \
-      dist/submit_ingest.py --wal <wal_dir> --lake <lake_dir> --mode mor
+      dist/submit_ingest.py --wal <wal_dir> --lake <lake_dir>
 
 The zip is importable without extraction (no binary/data resources in the
 package — the kernel LUTs are .py constants), verified by
