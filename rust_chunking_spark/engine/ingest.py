@@ -27,20 +27,19 @@ after every unchanged page has been dropped:
     -> lake.commit_delta(...)  [delta + meta land in one atomic snapshot
        flip = commit marker (epoch); replaying a committed epoch is a
        no-op => exactly-once]
-    -> chunk store: observability mode anti-joins vs the store (exact dedup
-       stats, globally-unique table, deduped=true manifest flag);
-       steady-state buffers the epoch's delta-file list and folds ALL
-       pending epochs into ONE append at flush() (deduped=false flag;
-       global uniqueness moves to chunk_store_current / ChunkStore.compact)
-       — O(epoch) read at flush, ZERO per-epoch store work
-    -> metrics + per-bucket lineage appended (steady-state: counted by an
-       observe node riding the meta-write job — no dedicated lineage action)
+    -> chunk store: the delta's chunks, anti-joined against the store, are
+       appended under the epoch's marker — the store stays globally unique
+       and chunks_new/bytes_new are exact (an O(store) read per epoch)
+    -> ONE metrics append: the per-(bucket, decision) lineage plus the
+       chunk-length histogram, written with the epoch as Delta Lake writes
+       statistics with its commit — nothing is buffered for a later flush
 
-Driver-action budget (the Amdahl term of the N->4N scaling rule): a
-steady-state epoch runs THREE Spark actions — the fused LWW collect, the one
-wide content pass, and the meta-commit write (which the lineage observation
-and snapshot stats ride) — plus two end-of-replay flush writes shared across
-all epochs.
+Driver-action budget (the Amdahl term of the N->4N scaling rule): an epoch
+runs EIGHT Spark actions — the fused LWW collect, the one wide content pass,
+the lineage collect, the meta-commit write, the chunk-store stats collect,
+the store append, the histogram collect and the metrics append. AQE splits
+them into query-stage jobs, and the parquet reads they open add schema-read
+jobs (34 per warm perfbench epoch, counted with `sc.statusTracker()`).
 
 Scale notes (100 TB): the only wide shuffle is the bucket repartition of the
 changed rows for the delta write, plus the fallback when a batch's winner set
@@ -56,7 +55,7 @@ from __future__ import annotations
 
 import dataclasses
 
-from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.errors import AnalysisException
 
 from ..functions.chunking import content_skip_udf
@@ -90,9 +89,8 @@ class CdcIngestJob:
     def __init__(self, spark: SparkSession, lake: MorBucketedLake,
                  chunk_store: AppendOnlyTable, metrics: AppendOnlyTable,
                  algo: str = "super", chunk_params: dict | None = None,
-                 salt_lww: bool = False, collect_metrics: bool = True,
-                 broadcast_limit: int | None = None, records=None,
-                 obs_lineage_max_buckets: int = 128):
+                 salt_lww: bool = False, broadcast_limit: int | None = None,
+                 records=None):
         self.spark = spark
         self.lake = lake
         self.chunk_store = chunk_store
@@ -100,36 +98,19 @@ class CdcIngestJob:
         self.algo = algo
         self.chunk_params = chunk_params or {}
         self.salt_lww = salt_lww
-        self.collect_metrics = collect_metrics
         if broadcast_limit is None:
             # the package-wide guard bound (one definition: operators/
             # curation.py) unless the caller tunes this job explicitly
             from ..operators.curation import BCAST_ROW_LIMIT
             broadcast_limit = BCAST_ROW_LIMIT
         self.broadcast_limit = broadcast_limit
-        #: Steady-state lineage rides an Observation on the meta write — but
-        #: the observe encoding is 7 when-sum aggregates PER DIRTY BUCKET
-        #: (one array slot each), an expression tree that grows linearly
-        #: with |dirty| and would explode planning/codegen at the 10^3-10^4
-        #: buckets of a 100x lake. Above this bound the epoch falls back to
-        #: the dedicated skinny `_collect_lineage` groupBy (one extra driver
-        #: action, O(|dirty| * 7) rows — bounded regardless of bucket
-        #: count). Identical lineage output either way (tested).
-        self.obs_lineage_max_buckets = obs_lineage_max_buckets
         #: SuperCDC seed record map (gear hash -> next-chunk length) for the
         #: reference's cross-file record reuse (supercdc.rs:49-59): a plain
         #: dict or an ``sc.broadcast`` handle, threaded into every chunking
         #: UDF this job builds; each row chunkers a FRESH COPY of the map
         #: (Chunker::with_records semantics — see functions/chunking.py).
         self.records = records
-        self.rows_chunked_acc = spark.sparkContext.accumulator(0)
-        self._pending_lineage: list = []
-        self._pending_chunks: list[tuple[int, list[str]]] = []
-        # per-epoch stashes (observability mode): decision lineage + the
-        # chunk-length histogram write as ONE metrics append in apply_epoch
-        self._epoch_lineage: list = []
-        self._obs_hist_rows: list = []
-        #: per-phase wall seconds of the most recent apply_epoch (observability)
+        #: per-phase wall seconds of the most recent apply_epoch
         self.last_phase_timings: dict[str, float] = {}
 
     def _bcast(self, df: DataFrame, n_rows: int) -> DataFrame:
@@ -242,26 +223,22 @@ class CdcIngestJob:
         extras = [c for c in latest.columns
                   if c not in {"url", "warc_ts", "lsn", "op", "html", "text",
                                "lang", "__fp", "n_events", "epoch"}]
-        merge_files = self._merge(m, latest, dirty, n_winners, extras, epoch,
-                                  _mark)
+        merge_files, lineage = self._merge(m, latest, dirty, n_winners,
+                                           extras, epoch, _mark)
 
         # derive the chunk store from the just-written files: a column-pruned
         # read of chunks only — html never re-read. Crash between the lake
         # commit and this append is repaired by run() via snapshot stats.
-        chunk_stats = self._update_chunk_store(merge_files, epoch)
+        chunk_stats, hist = self._update_chunk_store(merge_files, epoch)
         _mark("chunk_store")
         m.chunks_total, m.chunks_new, m.bytes_total, m.bytes_new = chunk_stats
-        if self.collect_metrics:
-            # ONE metrics append per epoch: decision lineage (stashed by
-            # _merge) + the chunk-length histogram from the store
-            # update. The metrics table's per-epoch commit marker no-ops a
-            # second append for the same epoch, so these must write together.
-            lin = [r.asDict() if hasattr(r, "asDict") else dict(r)
-                   for r in self._epoch_lineage]
-            self._append_metrics(lin + list(self._obs_hist_rows), epoch)
-            self._epoch_lineage = []
-            self._obs_hist_rows = []
-            _mark("metrics_write")
+        # ONE metrics append per epoch: decision lineage + the chunk-length
+        # histogram. The metrics table's per-epoch commit marker no-ops a
+        # second append for the same epoch, so these must write together.
+        self.metrics.append(
+            self.spark.createDataFrame(lineage + hist, self.LINEAGE_SCHEMA),
+            epoch)
+        _mark("metrics_write")
         keys.unpersist()
         self.last_phase_timings = phases
         return m
@@ -270,9 +247,10 @@ class CdcIngestJob:
 
     def _merge(self, m: IngestMetrics, latest: DataFrame, dirty: list[int],
                n_winners: int, extras: list[str], epoch: int,
-               _mark) -> list[str]:
+               _mark) -> tuple[list[str], list[dict]]:
         """Merge-on-read apply with ONE wide pass over the events; returns
-        the committed delta files.
+        the committed delta files and the epoch's per-(bucket, decision)
+        lineage rows.
 
         Content candidates (inserts + anything needing a fingerprint
         comparison) are fingerprinted AND — only when the fingerprint
@@ -344,59 +322,20 @@ class CdcIngestJob:
                           F.lit("update"))
                    .otherwise(F.lit("noop")))
             .otherwise(F.col("pre_decision")))
-        obs = None
-        if (self.collect_metrics or not dirty
-                or len(dirty) > self.obs_lineage_max_buckets):
-            # collect_metrics mode, the no-dirty edge case, AND the
-            # high-bucket-count fallback: the observe encoding below is
-            # 7 x |dirty| expressions, unbounded at 100x bucket counts —
-            # beyond the bound a dedicated skinny lineage collect is the
-            # bounded plan (VERDICT r3 #1).
-            decided = decided.cache()
-            lineage_rows = self._collect_lineage(decided, epoch, m)
-            _mark("decide_collect")
-        else:
-            # steady-state: no dedicated lineage job — a CollectMetrics
-            # (observe) node counts per-(bucket, decision) rows while the
-            # meta write below materializes the plan. One fewer driver
-            # action per epoch (the Amdahl term of the scaling rule). The
-            # observe sits BELOW the cache, so even though the meta
-            # assembly consumes `decided` twice, each partition is
-            # instrumented exactly once (at cache materialization).
-            obs = Observation()
-            decided = decided.observe(
-                obs, *self._lineage_obs_exprs(dirty)).cache()
+        decided = decided.cache()
+        lineage = self._collect_lineage(decided, epoch, m)
+        _mark("decide_collect")
 
         meta_rows = self._assemble_meta(decided, cur_meta_raw, extras,
                                         n_winners)
-        if obs is None:
-            if self.collect_metrics:
-                # stashed; apply_epoch writes it together with the
-                # chunk-length histogram in one per-epoch metrics append
-                self._epoch_lineage = lineage_rows
-            else:   # steady-state without an observation (no dirty buckets,
-                    # or the >obs_lineage_max_buckets fallback): buffers
-                self._append_metrics(lineage_rows, epoch)
-            stats = {"__schema": self._read_schema(cand_rows, meta_rows,
-                                                   extras),
-                     "__meta_schema": meta_rows.schema.json(),
-                     **dataclasses.asdict(m)}
-        else:
-            def stats():
-                # evaluated by commit_delta AFTER the meta write (the action
-                # that fires the observation) and BEFORE the snapshot flip,
-                # so verdict counts still land in the committed stats
-                self._append_metrics(
-                    self._lineage_from_obs(obs, dirty, epoch, m), epoch)
-                return {"__schema": self._read_schema(
-                            cand_rows, meta_rows, extras),
-                        "__meta_schema": meta_rows.schema.json(),
-                        **dataclasses.asdict(m)}
+        stats = {"__schema": self._read_schema(cand_rows, meta_rows, extras),
+                 "__meta_schema": meta_rows.schema.json(),
+                 **dataclasses.asdict(m)}
         self.lake.commit_delta(written, meta_rows, dirty, epoch, stats)
         _mark("merge_write")
         pre.unpersist()
         decided.unpersist()
-        return written
+        return written, lineage
 
     # ------------------------------------------------------------- decisions
 
@@ -423,7 +362,7 @@ class CdcIngestJob:
                             F.coalesce(F.col("cur_exists"), F.lit(False))))
 
     def _collect_lineage(self, decided: DataFrame, epoch: int,
-                         m: IngestMetrics) -> list:
+                         m: IngestMetrics) -> list[dict]:
         """Fused action: ONE collect of the per-(bucket, decision) lineage
         materializes the decided cache, yields the verdict counts, AND is
         the metrics payload — three driver round-trips folded into one."""
@@ -443,39 +382,7 @@ class CdcIngestJob:
         m.skipped_noop = verdicts.get("noop", 0)
         m.skipped_late = verdicts.get("skip_late", 0)
         m.skipped_duplicate = verdicts.get("skip_duplicate", 0)
-        return lineage_rows
-
-    DECISIONS = ("insert", "update", "delete", "delete_noexist", "noop",
-                 "skip_late", "skip_duplicate")
-
-    def _lineage_obs_exprs(self, dirty: list[int]) -> list:
-        """One array-of-counts aggregate per decision class, indexed by the
-        dirty-bucket list — the observe-compatible encoding of the
-        per-(bucket, decision) lineage groupBy."""
-        b = self.lake.bucket_expr()
-        return [F.array(*[F.sum(F.when((F.col("decision") == d)
-                                       & (b == bb), 1).otherwise(0))
-                          for bb in dirty]).alias(d)
-                for d in self.DECISIONS]
-
-    def _lineage_from_obs(self, obs: Observation, dirty: list[int],
-                          epoch: int, m: IngestMetrics) -> list:
-        """Decode the observation into lineage rows + verdict counts on m."""
-        vals = obs.get   # available: the meta write already ran
-        rows = []
-        totals: dict[str, int] = {}
-        for d in self.DECISIONS:
-            arr = vals[d]
-            totals[d] = int(sum(c or 0 for c in arr))
-            rows.extend((int(bb), d, int(c), epoch)
-                        for bb, c in zip(dirty, arr) if c)
-        m.applied_insert = totals["insert"]
-        m.applied_update = totals["update"]
-        m.applied_delete = totals["delete"] + totals["delete_noexist"]
-        m.skipped_noop = totals["noop"]
-        m.skipped_late = totals["skip_late"]
-        m.skipped_duplicate = totals["skip_duplicate"]
-        return rows
+        return [r.asDict() for r in lineage_rows]
 
     @staticmethod
     def _pre_decision_expr():
@@ -602,28 +509,21 @@ class CdcIngestJob:
 
     # ------------------------------------------------------------ chunk store
 
-    def _update_chunk_store(self, merge_files: list[str], epoch: int):
-        acc = self.rows_chunked_acc
+    def _update_chunk_store(self, merge_files: list[str], epoch: int
+                            ) -> tuple[tuple[int, int, int, int], list[dict]]:
+        """Append the epoch's new chunks to the store under its marker and
+        return ``((chunks_total, chunks_new, bytes_total, bytes_new),
+        chunk-length histogram rows)``. The delta's chunks are anti-joined
+        against the store, so the store stays globally unique and the new
+        counts are exact. Used by apply_epoch and by the crash repair."""
         if epoch in self.chunk_store.committed_epochs():
-            return 0, 0, 0, 0
-        if not self.collect_metrics:
-            # steady-state: ZERO per-epoch chunk-store work — buffer the
-            # epoch's merge-file list and fold every pending epoch into ONE
-            # append at flush(). Anti-joining the full store per epoch is
-            # O(store); even an epoch-delta append is a driver action on the
-            # hot path. Global uniqueness moves to the read side
-            # (chunk_store_current) and ChunkStore compaction — the same
-            # MoR trade the lake itself makes. Crash before flush() is
-            # repaired by run()'s sweep (lake-committed epochs missing from
-            # the store re-derive their delta from snapshot merge_files).
-            self._pending_chunks.append((epoch, list(merge_files)))
-            return 0, 0, 0, 0
+            return (0, 0, 0, 0), []
         written = self.lake.read_files(self.spark, merge_files)
         if written is None:
             self.chunk_store.append(
                 self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
                 epoch)
-            return 0, 0, 0, 0
+            return (0, 0, 0, 0), []
         # column-pruned: only chunks leave the parquet files. The delta holds
         # exactly this epoch's freshly chunked insert/update rows (no-op
         # chunks are already in the store from prior epochs). One
@@ -631,8 +531,7 @@ class CdcIngestJob:
         uniq = (written.select(F.explode("chunks").alias("c"))
                 .groupBy(F.col("c.hash").alias("chunk_hash"))
                 .agg(F.count("*").alias("mult"), F.min("c.len").alias("len")))
-        # observability mode: exact dedup stats + a globally-unique store
-        # (pays the O(store) anti-join; intended for tests / small batches)
+        # exact dedup stats + a globally-unique store: pays the O(store) join
         store = self.chunk_store.read(self.spark)
         if store is not None:
             uniq = uniq.join(store.select("chunk_hash")
@@ -652,40 +551,18 @@ class CdcIngestJob:
                       .select("chunk_hash", "len")
                       .withColumn("first_seen_epoch",
                                   F.lit(epoch).cast("long")))
-        self.chunk_store.append(new_chunks, epoch, props={"deduped": True})
+        self.chunk_store.append(new_chunks, epoch)
         # boundary-count histogram (north-star lineage item): 4 KiB buckets
         # of this epoch's written chunk lengths, weighted by occurrence.
-        # Rides the cached `uniq` — one extra tiny action, observability
-        # mode only (steady-state computes it at flush over all epochs).
-        # Stashed, not written: apply_epoch folds it into the epoch's single
-        # metrics append.
+        # Rides the cached `uniq` — one extra tiny action.
         hist = (uniq.groupBy((F.floor(F.col("len") / self.HIST_BUCKET)
                               * self.HIST_BUCKET).cast("long").alias("bucket"))
                 .agg(F.sum("mult").alias("cnt")).collect())
-        self._obs_hist_rows = [
-            {"bucket": int(r.bucket), "decision": "chunk_len_hist",
-             "cnt": int(r.cnt), "epoch": epoch} for r in hist]
         uniq.unpersist()
-        acc.add(int(agg.total_n))
-        return int(agg.total_n), int(agg.new_n), int(agg.total_b), int(agg.new_b)
-
-    def chunk_store_current(self, spark: SparkSession | None = None
-                            ) -> DataFrame | None:
-        """Deduplicated view of the chunk store (one row per hash, earliest
-        first_seen_epoch). In steady-state mode epochs append their own
-        deltas, so the same hash may appear in several epochs' files — this
-        is the read that collapses them (and what a compaction would
-        materialize)."""
-        spark = spark or self.spark
-        current = getattr(self.chunk_store, "current", None)
-        if current is not None:          # ChunkStore owns the collapse rule
-            return current(spark)
-        raw = self.chunk_store.read(spark)
-        if raw is None:
-            return None
-        return (raw.groupBy("chunk_hash")
-                .agg(F.min("len").alias("len"),
-                     F.min("first_seen_epoch").alias("first_seen_epoch")))
+        hist_rows = [{"bucket": int(r.bucket), "decision": "chunk_len_hist",
+                      "cnt": int(r.cnt), "epoch": epoch} for r in hist]
+        return ((int(agg.total_n), int(agg.new_n), int(agg.total_b),
+                 int(agg.new_b)), hist_rows)
 
     # ---------------------------------------------------------------- metrics
 
@@ -694,99 +571,10 @@ class CdcIngestJob:
     #: lineage schema with decision='chunk_len_hist' and bucket=floor(len/4Ki)
     HIST_BUCKET = 4096
 
-    def _append_metrics(self, lineage_rows: list, epoch: int) -> None:
-        """Write the already-collected lineage rows (tiny, driver-local).
-
-        collect_metrics=False (steady-state) buffers rows and flushes them in
-        one write at the end of the replay — per-epoch metric writes are pure
-        serial floor.
-        """
-        if self.collect_metrics:
-            self.metrics.append(
-                self.spark.createDataFrame(lineage_rows, self.LINEAGE_SCHEMA),
-                epoch)
-        else:
-            self._pending_lineage.append((epoch, lineage_rows))
-
-    def flush_metrics(self) -> None:
-        """Write lineage buffered by collect_metrics=False mode. All pending
-        rows for one epoch (decision counts AND the chunk-length histogram
-        from flush_chunk_store) merge into ONE append — the metrics table's
-        per-epoch commit marker makes a second append for the same epoch a
-        no-op, so split writes would silently drop rows."""
-        by_epoch: dict[int, list] = {}
-        for epoch, rows in self._pending_lineage:
-            by_epoch.setdefault(epoch, []).extend(rows)
-        for epoch, rows in by_epoch.items():
-            if rows:
-                self.metrics.append(
-                    self.spark.createDataFrame(rows, self.LINEAGE_SCHEMA),
-                    epoch)
-        self._pending_lineage = []
-
-    def flush_chunk_store(self) -> None:
-        """Fold every pending epoch's chunk delta into ONE append (ONE Spark
-        job): union the epochs' merge files tagged with their epoch, explode,
-        and take per-hash (min len, min first_seen_epoch). Duplicates vs
-        PRIOR flushes are allowed (steady-state store contract, recorded as
-        deduped=false in the store manifest); chunk_store_current collapses
-        them with the same min() rule, so first_seen_epoch stays exact."""
-        committed = self.chunk_store.committed_epochs()
-        pending = [(ep, files) for ep, files in self._pending_chunks
-                   if ep not in committed]
-        if not pending:
-            self._pending_chunks = []
-            return
-        parts = []
-        for ep, files in pending:
-            df = self.lake.read_files(self.spark, files)
-            if df is not None:
-                parts.append(df.select("chunks", F.lit(ep).alias("__ep")))
-        epochs = [ep for ep, _ in pending]
-        if not parts:
-            self.chunk_store.append(
-                self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
-                epochs, props={"deduped": False})
-            self._pending_chunks = []
-            return
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p)
-        raw = (rows.select(F.explode("chunks").alias("c"), "__ep")
-               .select(F.col("c.hash").alias("chunk_hash"),
-                       F.col("c.len").alias("len"),
-                       F.col("__ep").alias("first_seen_epoch")))
-        delta = (raw.groupBy("chunk_hash")
-                 .agg(F.min("len").alias("len"),
-                      F.min("first_seen_epoch").alias("first_seen_epoch")))
-        self.chunk_store.append(delta, epochs, props={"deduped": False})
-        # Boundary-count histograms for every flushed epoch: every delta row
-        # is an applied insert/update (no-op recrawls are dropped before the
-        # delta write and tombstones never reach it), so each epoch's
-        # histogram is a plain count over its own delta — the same rows
-        # observability mode counts. Buffered so flush_metrics writes them
-        # with the lineage.
-        hist = (raw.groupBy(
-                    F.col("first_seen_epoch").alias("epoch"),
-                    (F.floor(F.col("len") / self.HIST_BUCKET)
-                     * self.HIST_BUCKET).cast("long").alias("bucket"))
-                .agg(F.count("*").alias("cnt")).collect())
-        by_epoch: dict[int, list] = {}
-        for r in hist:
-            by_epoch.setdefault(int(r.epoch), []).append(
-                {"bucket": int(r.bucket), "decision": "chunk_len_hist",
-                 "cnt": int(r.cnt), "epoch": int(r.epoch)})
-        for ep, rows in by_epoch.items():
-            self._pending_lineage.append((ep, rows))
-        # cleared only AFTER the append commits — a transient failure above
-        # leaves the buffer intact so a retried flush() still has the deltas
-        self._pending_chunks = []
-
     def flush(self) -> None:
-        """End-of-replay flush for steady-state mode: chunk-store delta +
-        buffered lineage, each one write."""
-        self.flush_chunk_store()
-        self.flush_metrics()
+        """No-op. Every epoch writes its chunk-store and metrics appends
+        inside apply_epoch, so nothing is buffered; kept so a caller that
+        ends a replay with ``flush()`` (the perfbench harness) still runs."""
 
     # ------------------------------------------------------------------- run
 
@@ -795,11 +583,9 @@ class CdcIngestJob:
         already-committed epochs are skipped (resume-from-checkpoint).
 
         Before replaying, any lake-committed epoch missing from the chunk
-        store (a crash between the lake commit and the store append/flush,
-        in either mode) is repaired from the snapshot's recorded merge
-        files — not just epochs named in this call's list. Epochs buffered
-        for this job's own deferred flush are excluded (they are not lost,
-        just pending)."""
+        store (a crash between the lake commit and the store append) is
+        repaired from the snapshot's recorded merge files — not just epochs
+        named in this call's list."""
         import os
 
         self.repair_chunk_store_gaps()
@@ -815,17 +601,14 @@ class CdcIngestJob:
     def repair_chunk_store_gaps(self) -> list[int]:
         """Re-derive the chunk-store delta of every lake-committed epoch the
         store is missing (a crash between the lake commit and the store
-        append/flush, in either mode). run() does this before replaying;
-        maintenance-only invocations MUST do it before compact/expire too
-        (ADVICE r4 #2): compaction supersedes and expiry deletes the
-        merge/delta dirs the repair reads from, and a crashed process's
-        pending flush buffer died with it, so skipping the repair there
-        loses the epoch's chunks for good. Epochs buffered for THIS job's
-        own deferred flush are excluded (not lost, just pending). Returns
-        the repaired epochs."""
-        pending = {ep for ep, _ in self._pending_chunks}
+        append). run() and the streaming front-end do this before applying
+        epochs; maintenance-only invocations MUST do it before
+        compact/expire too (ADVICE r4 #2): compaction supersedes and expiry
+        deletes the merge/delta dirs the repair reads from, so skipping the
+        repair there loses the epoch's chunks for good. Returns the
+        repaired epochs."""
         missing = (self.lake.committed_epochs()
-                   - self.chunk_store.committed_epochs() - pending)
+                   - self.chunk_store.committed_epochs())
         for ep in sorted(missing):
             self._repair_chunk_store(ep)
         return sorted(missing)
@@ -833,26 +616,6 @@ class CdcIngestJob:
     def _repair_chunk_store(self, epoch: int) -> None:
         """Crash between lake commit and chunk-store append: re-derive the
         epoch's chunk delta from the merge files recorded in snapshot stats."""
-        if epoch in self.chunk_store.committed_epochs():
-            return
         stats = self.lake.current_snapshot().get("stats", {}).get(str(epoch))
-        if stats is None:
-            return
-        files = stats.get("merge_files", [])
-        written = self.lake.read_files(self.spark, files)
-        if written is None:
-            self.chunk_store.append(
-                self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
-                epoch)
-            return
-        uniq = (written.select(F.explode("chunks").alias("c"))
-                .groupBy(F.col("c.hash").alias("chunk_hash"))
-                .agg(F.min("c.len").alias("len")))
-        store = self.chunk_store.read(self.spark)
-        if store is not None:
-            uniq = uniq.join(store.select("chunk_hash"), "chunk_hash",
-                             "left_anti")
-        self.chunk_store.append(
-            uniq.withColumn("first_seen_epoch", F.lit(epoch).cast("long")),
-            epoch,
-            props={"deduped": True})
+        if stats is not None:
+            self._update_chunk_store(stats.get("merge_files", []), epoch)

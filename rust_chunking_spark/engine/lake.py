@@ -268,12 +268,9 @@ class MorBucketedLake(SnapshotTable):
                      dirty_buckets: list[int], epoch: int,
                      stats: dict | None = None) -> list[str]:
         """Atomically commit previously-written wide delta files + the dirty
-        buckets' new skinny meta in one snapshot flip.
-
-        `stats` may be a zero-arg callable, evaluated after the meta write
-        but before the snapshot flip — the hook the engine uses to harvest
-        observation metrics from the write job itself (no extra action) while
-        still landing real verdict counts in the committed stats."""
+        buckets' new skinny meta in one snapshot flip; ``stats`` (the
+        epoch's verdict counts plus the ``__schema``/``__meta_schema``
+        keys) land in the committed manifest."""
         snap = self.current_snapshot()
         token = f"e{epoch:06d}-{uuid.uuid4().hex[:8]}"
         n_part = max(1, len(dirty_buckets))
@@ -295,8 +292,6 @@ class MorBucketedLake(SnapshotTable):
         for b in dirty_buckets:                           # emptied bucket
             meta_files.setdefault(str(b), [])
 
-        if callable(stats):
-            stats = stats()
         stats = dict(stats or {})
         schema = stats.pop("__schema", snap["schema"])
         meta_schema = stats.pop("__meta_schema", snap.get("meta_schema"))
@@ -485,51 +480,29 @@ class MorBucketedLake(SnapshotTable):
 
 class AppendOnlyTable(SnapshotTable):
     """Append-only parquet table with atomic per-epoch commits (chunk store,
-    metrics). An epoch's files become visible only via the manifest flip, and
-    re-appending a committed epoch is a no-op — idempotent under replay.
-    ``expire_snapshots()`` collects the append dirs superseded by
-    ``ChunkStore.compact()`` (VERDICT r3 #8)."""
+    metrics): each epoch writes ONE append, whose files become visible only
+    via the manifest flip, and re-appending a committed epoch is a no-op —
+    idempotent under replay. ``expire_snapshots()`` collects the append dirs
+    superseded by ``ChunkStore.compact()`` (VERDICT r3 #8)."""
 
-    def append(self, df: DataFrame, epoch: int | list[int],
-               props: dict | None = None) -> None:
-        """Append df, atomically marking one epoch (or a list of epochs —
-        the steady-state flush folds several epochs into one write)
-        committed. `props` merge into the table manifest; the `deduped`
-        flag records whether every append so far was globally unique
-        (observability mode) or duplicates are collapsed at read time
-        (steady-state mode) — it only ever degrades True -> False, so any
-        consumer can trust a True."""
-        epochs = sorted({epoch} if isinstance(epoch, int) else set(epoch))
+    def append(self, df: DataFrame, epoch: int) -> None:
+        """Append df, atomically marking ``epoch`` committed."""
         snap = self.current_snapshot()
-        new = [e for e in epochs if e not in snap["committed_epochs"]]
-        if not new:
+        if epoch in snap["committed_epochs"]:
             return
-        token = f"e{new[0]:06d}-{uuid.uuid4().hex[:8]}"
-        rel = f"append-{token}"
+        rel = f"append-e{epoch:06d}-{uuid.uuid4().hex[:8]}"
         df.write.mode("overwrite").parquet(os.path.join(self.path, "data", rel))
         files = dict(snap["files"])
         files.setdefault("0", []).append(rel)
-        old_props = dict(snap.get("props", {}))
-        if props:
-            merged = {**old_props, **props}
-            if "deduped" in old_props or "deduped" in (props or {}):
-                merged["deduped"] = (old_props.get("deduped", True)
-                                     and props.get("deduped", True))
-            old_props = merged
         self._commit({
             "version": snap["version"] + 1,
             "files": files,
             "committed_epochs": sorted(set(snap["committed_epochs"])
-                                       | set(new)),
+                                       | {epoch}),
             "schema": snap["schema"],
             "stats": snap.get("stats", {}),
-            "props": old_props,
             "ts": time.time(),
         })
-
-    def props(self) -> dict:
-        """Table manifest properties (e.g. the `deduped` store-mode flag)."""
-        return dict(self.current_snapshot().get("props", {}))
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         snap = self.current_snapshot()
@@ -539,46 +512,32 @@ class AppendOnlyTable(SnapshotTable):
 
 
 class ChunkStore(AppendOnlyTable):
-    """Chunk-hash store: an AppendOnlyTable plus the read-side dedup view and
-    the maintenance op that bounds it.
+    """Chunk-hash store: an AppendOnlyTable plus the maintenance op that
+    bounds its file count.
 
-    Steady-state ingest appends per-flush deltas in which the same hash may
-    recur across epochs (deduped=false manifest flag); `current()` collapses
-    them (one row per hash, earliest first_seen_epoch, min len) and
-    `compact()` MATERIALIZES that view — folding N delta files into one and
-    restoring the deduped=true contract — so the read cost stays O(unique
+    Every epoch appends only the chunks its delta adds, anti-joined against
+    the store, so the table is globally unique (one row per hash, earliest
+    first_seen_epoch) at every commit. Each append is one data directory;
+    `compact()` folds them into one so the read cost stays O(unique
     chunks) no matter how many epochs have appended. Mirrors the lake's own
     MoR compact(): same trade, same maintenance cadence."""
 
     DEDUP_SCHEMA = "chunk_hash binary, len long, first_seen_epoch long"
 
-    def current(self, spark: SparkSession) -> DataFrame | None:
-        """Deduplicated view: one row per hash, earliest sighting wins."""
-        raw = self.read(spark)
-        if raw is None:
-            return None
-        return (raw.groupBy("chunk_hash")
-                .agg(F.min("len").alias("len"),
-                     F.min("first_seen_epoch").alias("first_seen_epoch")))
-
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
-        """Fold delta files into one deduplicated file (new manifest
-        version; committed epochs and props carry over, with deduped
-        restored to true). Returns the number of files folded, 0 if the
-        store is already within target. Superseded data directories stay on
-        disk until ``expire_snapshots()`` collects them (same orphan policy
-        as the lake: compaction flips the manifest, expiry reclaims)."""
+        """Fold the append directories into one file (new manifest version;
+        committed epochs carry over). Returns the number of files folded, 0
+        if the store is already within target. Superseded data directories
+        stay on disk until ``expire_snapshots()`` collects them (same orphan
+        policy as the lake: compaction flips the manifest, expiry
+        reclaims)."""
         snap = self.current_snapshot()
         files = snap["files"].get("0", [])
         if len(files) <= target_files:
             return 0
-        cur = self.current(spark)
         rel = f"append-compact-{uuid.uuid4().hex[:8]}"
-        cur.write.mode("overwrite").parquet(
+        self.read(spark).write.mode("overwrite").parquet(
             os.path.join(self.path, "data", rel))
-        props = dict(snap.get("props", {}))
-        props["deduped"] = True
         self._commit({**snap, "version": snap["version"] + 1,
-                      "files": {"0": [rel]}, "props": props,
-                      "ts": time.time()})
+                      "files": {"0": [rel]}, "ts": time.time()})
         return len(files)

@@ -7,12 +7,17 @@ executors. Locally:
 
   python -m rust_chunking_spark.ingest_cli --wal WAL_DIR --lake LAKE_DIR \\
       [--algo super] [--buckets 32] [--epochs 0 1 2] \\
-      [--stream] [--salt-lww] [--cpus 8]
+      [--stream] [--salt-lww] [--cpus 8] \\
+      [--compact-store] [--compact-lake] [--rebucket N] [--expire KEEP]
 
 Batch mode replays the requested epochs (default: every epoch on disk)
 through the exactly-once merge into the merge-on-read lake; already-committed
-epochs are skipped (resume-from-checkpoint). --stream drives the same engine
-through Structured Streaming's foreachBatch with availableNow semantics.
+epochs are skipped (resume-from-checkpoint). Each epoch commits its
+chunk-store append (exact dedup stats) and its metrics row set (decision
+lineage + chunk-length histogram) as it is applied; batch mode prints one
+JSON line per applied epoch. --stream drives the same engine through Structured
+Streaming's foreachBatch with availableNow semantics. The maintenance flags
+may run without --wal.
 """
 
 from __future__ import annotations
@@ -35,13 +40,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--stream", action="store_true",
                     help="drive through Structured Streaming (availableNow)")
     ap.add_argument("--salt-lww", action="store_true")
-    ap.add_argument("--steady", action="store_true",
-                    help="steady-state mode: per-epoch dedup stats off, "
-                         "lineage + chunk-store deltas flushed once at end "
-                         "(3 Spark actions/epoch — the throughput shape)")
     ap.add_argument("--compact-store", action="store_true",
-                    help="fold chunk-store delta files into one "
-                         "deduplicated file after the replay")
+                    help="fold the chunk store's per-epoch files into "
+                         "one after the replay")
     ap.add_argument("--compact-lake", action="store_true",
                     help="fold each bucket's files to one after the replay "
                          "(bounds MoR read amplification)")
@@ -72,8 +73,7 @@ def main(argv: list[str] | None = None) -> int:
     job = CdcIngestJob(spark, lake,
                        ChunkStore(f"{args.lake}/chunks"),
                        AppendOnlyTable(f"{args.lake}/metrics"),
-                       algo=args.algo, salt_lww=args.salt_lww,
-                       collect_metrics=not args.steady)
+                       algo=args.algo, salt_lww=args.salt_lww)
     try:
         if args.rebucket:
             old = lake.rebucket(spark, args.rebucket)
@@ -98,10 +98,9 @@ def main(argv: list[str] | None = None) -> int:
             epochs = (args.epochs if args.epochs
                       else WalSource(args.wal).epochs())
             results = job.run(args.wal, epochs)
-        job.flush()
         if args.compact_store or args.compact_lake or args.expire:
             # Repair BEFORE any maintenance op (ADVICE r4 #2): a crash
-            # between a lake commit and the chunk-store flush leaves the
+            # between a lake commit and the chunk-store append leaves the
             # store an epoch behind, and compact/expire would supersede
             # then delete the very merge/delta dirs that repair reads.
             repaired = job.repair_chunk_store_gaps()

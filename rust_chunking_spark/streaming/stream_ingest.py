@@ -69,12 +69,8 @@ def start_stream_ingest(spark: SparkSession, job: CdcIngestJob, wal_dir: str,
         # that committed to the lake but crashed before its chunk-store
         # append is ALREADY excluded from `candidates` below (it is
         # lake-committed), so without this sweep the streaming path would
-        # never repair it. Pending epochs are excluded — they are buffered
-        # for this job's own deferred flush, not lost.
-        pending = {ep for ep, _ in job._pending_chunks}
-        for ep in sorted(job.lake.committed_epochs()
-                         - job.chunk_store.committed_epochs() - pending):
-            job._repair_chunk_store(ep)
+        # never repair it.
+        job.repair_chunk_store_gaps()
         # the batch content is only the trigger; candidates come from a WAL
         # sweep so previously-deferred epochs are always retried
         on_disk = set(WalSource(wal_dir).epochs())

@@ -218,48 +218,72 @@ def test_engine_supercdc_record_seeding(spark, tmp_path):
         any_diff = any_diff or exp_seeded != exp_unseeded
     assert any_diff
 
-def test_chunk_len_histogram_in_metrics_both_modes(spark, wal, tmp_path):
+
+def _chunk_len_hist(pages):
+    """Chunk-length histogram of ``pages`` chunked by the numpy SuperCDC
+    kernel, every chunk occurrence counted in its HIST_BUCKET bucket."""
+    from collections import Counter
+
+    from rust_chunking_spark.kernels import vectorized as V
+
+    width = CdcIngestJob.HIST_BUCKET
+    return dict(Counter(int(ln) // width * width
+                        for p in pages for _, ln in V.super_chunks(p)))
+
+
+def _expected_chunk_len_hist(wal, epoch):
+    """Independent count of one epoch's chunk-length histogram over the
+    pages the epoch applied: live after it, and new or changed against the
+    state before it (a no-op recrawl applies nothing)."""
+    before = expected_final_state(wal[:epoch])
+    after = expected_final_state(wal[:epoch + 1])
+    return _chunk_len_hist(
+        ev["html"] for url, ev in after.items()
+        if url not in before or before[url]["html"] != ev["html"])
+
+
+def test_chunk_len_histogram_in_metrics(spark, wal, tmp_path):
     """Boundary-count histograms (north-star lineage item) land in the
-    metrics table alongside the decision lineage, in BOTH metric modes —
-    and since the table's per-epoch commit marker no-ops repeat appends,
-    this also guards the one-append-per-epoch merge (a split write would
-    silently drop whichever half came second)."""
+    metrics table alongside the decision lineage, and each epoch's rows
+    equal an independent count over the pages that epoch applied. Since
+    the table's per-epoch commit marker no-ops repeat appends, this also
+    guards the one-append-per-epoch merge (a split write would silently
+    drop whichever half came second)."""
     wal_dir = str(tmp_path / "wal")
     _write_wal(spark, wal, wal_dir)
-
-    # observability mode: per-epoch histogram over deduped (hash, mult)
-    job = _mk_job(spark, str(tmp_path / "obs"))
+    job = _mk_job(spark, str(tmp_path))
     results = job.run(wal_dir, list(range(N_EPOCHS)))
     mt = job.metrics.read(spark).collect()
-    hist = [r for r in mt if r.decision == "chunk_len_hist"]
-    lineage = [r for r in mt if r.decision != "chunk_len_hist"]
-    assert hist and lineage                      # neither half was dropped
-    assert all(r.bucket % CdcIngestJob.HIST_BUCKET == 0 for r in hist)
-    per_epoch = {}
-    for r in hist:
-        per_epoch[r.epoch] = per_epoch.get(r.epoch, 0) + r.cnt
-    # histogram mass == chunk instances counted by the same pass
+    assert job.metrics.committed_epochs() == set(range(N_EPOCHS))
+    hist, lineage = {}, {}
+    for r in mt:
+        if r.decision == "chunk_len_hist":
+            hist.setdefault(r.epoch, {})[r.bucket] = r.cnt
+        else:
+            per = lineage.setdefault(r.epoch, {})
+            per[r.decision] = per.get(r.decision, 0) + r.cnt
     for m in results:
-        if m.chunks_total:
-            assert per_epoch.get(m.epoch) == m.chunks_total
+        assert hist.get(m.epoch, {}) == _expected_chunk_len_hist(wal, m.epoch)
+        # histogram mass == chunk instances counted by the store update
+        assert sum(hist.get(m.epoch, {}).values()) == m.chunks_total
+        got = lineage[m.epoch]
+        assert got.get("insert", 0) == m.applied_insert
+        assert got.get("update", 0) == m.applied_update
+        assert got.get("noop", 0) == m.skipped_noop
+    assert sum(len(h) for h in hist.values()) > N_EPOCHS  # several buckets
 
-    # steady-state mode: histograms computed once at flush, per epoch
-    from rust_chunking_spark.engine import ChunkStore
+    # one more epoch: two new urls carrying one live page's bytes, so every
+    # chunk occurs twice in the epoch and is already in the store. The
+    # histogram counts occurrences, not distinct hashes; none of it is new.
+    import datetime
 
-    lake2 = MorBucketedLake(str(tmp_path / "ss/lake"), n_buckets=8)
-    job2 = CdcIngestJob(spark, lake2,
-                        ChunkStore(str(tmp_path / "ss/chunks")),
-                        AppendOnlyTable(str(tmp_path / "ss/metrics")),
-                        collect_metrics=False)
-    job2.run(wal_dir, list(range(N_EPOCHS)))
-    job2.flush()
-    mt2 = job2.metrics.read(spark).collect()
-    hist2 = [r for r in mt2 if r.decision == "chunk_len_hist"]
-    lineage2 = [r for r in mt2 if r.decision != "chunk_len_hist"]
-    assert lineage2                              # decision rows survived
-    eps_with_hist = {r.epoch for r in hist2}
-    # every epoch that wrote chunks has histogram rows
-    chunked_eps = {r.epoch for r in hist2}
-    assert eps_with_hist == chunked_eps and len(eps_with_hist) >= 1
-    assert all(r.cnt > 0 and r.bucket % CdcIngestJob.HIST_BUCKET == 0
-               for r in hist2)
+    page = next(iter(expected_final_state(wal).values()))["html"]
+    dup = [{"url": f"https://dup.test/{i}", "op": "I", "lsn": 10**6 + i,
+            "warc_ts": datetime.datetime(2030, 1, 1), "html": page,
+            "text": "dup", "lang": "en"} for i in range(2)]
+    m = job.apply_epoch(spark.createDataFrame(dup), N_EPOCHS)
+    once = _chunk_len_hist([page])
+    got = {r.bucket: r.cnt for r in job.metrics.read(spark).collect()
+           if r.epoch == N_EPOCHS and r.decision == "chunk_len_hist"}
+    assert got == {b: 2 * c for b, c in once.items()}
+    assert m.chunks_total == 2 * sum(once.values()) and m.chunks_new == 0

@@ -231,10 +231,9 @@ def test_cli_maintenance_flags(spark, wal, tmp_path, monkeypatch, capsys):
     monkeypatch.setattr(spark, "stop", lambda: None)
     lk_root = str(tmp_path / "lk")
     assert ingest_cli.main(["--wal", wal_dir, "--lake", lk_root,
-                            "--buckets", "8", "--epochs", "0", "1",
-                            "--steady"]) == 0
+                            "--buckets", "8", "--epochs", "0", "1"]) == 0
     assert ingest_cli.main(["--lake", lk_root, "--rebucket", "16"]) == 0
-    assert ingest_cli.main(["--wal", wal_dir, "--lake", lk_root, "--steady",
+    assert ingest_cli.main(["--wal", wal_dir, "--lake", lk_root,
                             "--compact-store", "--compact-lake",
                             "--expire", "1"]) == 0
     out = capsys.readouterr().out
