@@ -35,11 +35,14 @@ after every unchanged page has been dropped:
        statistics with its commit — nothing is buffered for a later flush
 
 Driver-action budget (the Amdahl term of the N->4N scaling rule): an epoch
-runs EIGHT Spark actions — the fused LWW collect, the one wide content pass,
-the lineage collect, the meta-commit write, the chunk-store stats collect,
-the store append, the histogram collect and the metrics append. AQE splits
-them into query-stage jobs, and the parquet reads they open add schema-read
-jobs (34 per warm perfbench epoch, counted with `sc.statusTracker()`).
+runs SIX Spark actions — the fused LWW collect, the one wide content pass,
+the lineage collect, the meta-commit write, the one chunk-store collect
+(dedup totals and histogram together) and the store append. AQE splits them
+into query-stage jobs: 24 per warm perfbench epoch, plus the WAL read's
+schema job (counted with `sc.statusTracker()`). The engine's own tables
+cost no job beyond that: their files are read with the schema the manifest
+records, and the metrics rows, already on the driver, are written by
+pyarrow.
 
 Scale notes (100 TB): the only wide shuffle is the bucket repartition of the
 changed rows for the delta write, plus the fallback when a batch's winner set
@@ -55,6 +58,7 @@ from __future__ import annotations
 
 import dataclasses
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.errors import AnalysisException
 
@@ -235,8 +239,9 @@ class CdcIngestJob:
         # ONE metrics append per epoch: decision lineage + the chunk-length
         # histogram. The metrics table's per-epoch commit marker no-ops a
         # second append for the same epoch, so these must write together.
+        # The rows are already on the driver: pyarrow writes them, no job.
         self.metrics.append(
-            self.spark.createDataFrame(lineage + hist, self.LINEAGE_SCHEMA),
+            pa.Table.from_pylist(lineage + hist, schema=self.LINEAGE_SCHEMA),
             epoch)
         _mark("metrics_write")
         keys.unpersist()
@@ -306,7 +311,7 @@ class CdcIngestJob:
         # from the delta — absence IS the no-op verdict (the old shape
         # re-read every staged fingerprint and compared; the comparison
         # already happened inside the UDF)
-        staged = self.lake.read_files(self.spark, written)
+        staged = self.lake.read_files(self.spark, written, cand_rows.schema)
         if staged is not None:
             staged_fp = staged.select("url",
                                       F.col("content_fp").alias("ev_fp"),
@@ -518,7 +523,9 @@ class CdcIngestJob:
         counts are exact. Used by apply_epoch and by the crash repair."""
         if epoch in self.chunk_store.committed_epochs():
             return (0, 0, 0, 0), []
-        written = self.lake.read_files(self.spark, merge_files)
+        written = self.lake.read_files(
+            self.spark, merge_files,
+            self.lake._schema_from_json(self.lake.current_snapshot()["schema"]))
         if written is None:
             self.chunk_store.append(
                 self.spark.createDataFrame([], ChunkStore.DEDUP_SCHEMA),
@@ -541,32 +548,34 @@ class CdcIngestJob:
             uniq = uniq.withColumn("__seen", F.lit(None).cast("boolean"))
         is_new = F.col("__seen").isNull()
         uniq = uniq.cache()
-        agg = uniq.agg(
-            F.coalesce(F.sum("mult"), F.lit(0)).alias("total_n"),
-            F.coalesce(F.sum(F.col("mult") * F.col("len")), F.lit(0)).alias("total_b"),
-            F.coalesce(F.sum(F.when(is_new, 1).otherwise(0)), F.lit(0)).alias("new_n"),
-            F.coalesce(F.sum(F.when(is_new, F.col("len")).otherwise(0)), F.lit(0)).alias("new_b"),
-        ).collect()[0]
+        # ONE collect: per 4 KiB length bucket (north-star lineage item), the
+        # occurrence-weighted histogram count plus the bucket's share of the
+        # dedup totals, which the driver sums
+        per_bucket = (uniq.groupBy((F.floor(F.col("len") / self.HIST_BUCKET)
+                                    * self.HIST_BUCKET).cast("long")
+                                   .alias("bucket"))
+                      .agg(F.sum("mult").alias("cnt"),
+                           F.sum(F.col("mult") * F.col("len")).alias("b"),
+                           F.sum(is_new.cast("long")).alias("new_n"),
+                           F.sum(F.when(is_new, F.col("len")).otherwise(0))
+                           .alias("new_b"))
+                      .collect())
         new_chunks = (uniq.filter(is_new)
                       .select("chunk_hash", "len")
                       .withColumn("first_seen_epoch",
                                   F.lit(epoch).cast("long")))
         self.chunk_store.append(new_chunks, epoch)
-        # boundary-count histogram (north-star lineage item): 4 KiB buckets
-        # of this epoch's written chunk lengths, weighted by occurrence.
-        # Rides the cached `uniq` — one extra tiny action.
-        hist = (uniq.groupBy((F.floor(F.col("len") / self.HIST_BUCKET)
-                              * self.HIST_BUCKET).cast("long").alias("bucket"))
-                .agg(F.sum("mult").alias("cnt")).collect())
         uniq.unpersist()
         hist_rows = [{"bucket": int(r.bucket), "decision": "chunk_len_hist",
-                      "cnt": int(r.cnt), "epoch": epoch} for r in hist]
-        return ((int(agg.total_n), int(agg.new_n), int(agg.total_b),
-                 int(agg.new_b)), hist_rows)
+                      "cnt": int(r.cnt), "epoch": epoch} for r in per_bucket]
+        return (tuple(int(sum(r[k] for r in per_bucket))
+                      for k in ("cnt", "new_n", "b", "new_b")), hist_rows)
 
     # ---------------------------------------------------------------- metrics
 
-    LINEAGE_SCHEMA = "bucket long, decision string, cnt long, epoch long"
+    LINEAGE_SCHEMA = pa.schema([("bucket", pa.int64()),
+                                ("decision", pa.string()),
+                                ("cnt", pa.int64()), ("epoch", pa.int64())])
     #: chunk-length histogram bucket width (bytes); histogram rows reuse the
     #: lineage schema with decision='chunk_len_hist' and bucket=floor(len/4Ki)
     HIST_BUCKET = 4096

@@ -84,8 +84,11 @@ def test_full_replay_matches_oracle(spark, wal, tmp_path):
     new = sum(m.chunks_new for m in results)
     assert 0 < new <= total
 
-    # metrics table has per-bucket lineage rows for each epoch
+    # metrics table has per-bucket lineage rows for each epoch, with the
+    # lineage schema's types (the rows are written by pyarrow)
     mt = job.metrics.read(spark)
+    assert mt.dtypes == [("bucket", "bigint"), ("decision", "string"),
+                         ("cnt", "bigint"), ("epoch", "bigint")]
     eps = {r.epoch for r in mt.select("epoch").distinct().collect()}
     assert eps == set(range(N_EPOCHS))
 
@@ -127,15 +130,65 @@ def test_schema_evolution_additive(spark, wal, tmp_path):
     assert n_set > 0 and n_null > 0   # both pre- and post-evolution rows present
 
 
+def test_schema_evolution_reads_old_meta_file_as_null(spark, tmp_path):
+    """A column that appears after a bucket's meta file was written reads
+    as null from that file: reads use the manifest's recorded (widest)
+    schema, not the file's own."""
+    import datetime
+
+    def ev(i, lsn, html, **extra):
+        return {"url": f"https://ex.com/{i}", "op": "I", "lsn": lsn,
+                "warc_ts": datetime.datetime(2026, 1, 1, 0, lsn),
+                "html": html, "text": f"t{i}", "lang": "en", **extra}
+
+    job = CdcIngestJob(spark, MorBucketedLake(f"{tmp_path}/lake", n_buckets=2),
+                       AppendOnlyTable(f"{tmp_path}/chunks"),
+                       AppendOnlyTable(f"{tmp_path}/metrics"))
+    job.apply_epoch(spark.createDataFrame(
+        [ev(i, i + 1, b"<p>old %d</p>" % i) for i in range(8)]), 0)
+    job.apply_epoch(spark.createDataFrame(
+        [ev(0, 10, b"<p>new 0</p>", fetch_status=200)]), 1)
+    snap = job.lake.current_snapshot()
+    old_files = {b for b, fl in snap["meta_files"].items()
+                 if fl and fl[0].startswith("meta-e000000")}
+    assert len(old_files) == 1   # one bucket still on its epoch-0 meta file
+    rows = {r.url: r for r in job.lake.read(spark).collect()}
+    assert len(rows) == 8 and rows["https://ex.com/0"].fetch_status == 200
+    clean = job.lake.read_meta(spark, buckets=[int(b) for b in old_files])
+    assert "fetch_status" in clean.columns and clean.count() > 0
+    assert clean.filter(F.col("fetch_status").isNotNull()).count() == 0
+    for url in (r.url for r in clean.collect()):
+        assert rows[url].fetch_status is None
+
+
 def test_chunk_store_consistency(spark, wal, tmp_path):
-    """Chunk store holds exactly the distinct chunk hashes of all live+dead content."""
+    """Chunk store holds exactly the distinct chunk hashes of all live+dead
+    content: one row per hash, equal to an independent sha3 over the
+    SuperCDC spans of every page version some epoch applied, with that
+    span's length and the earliest epoch that applied it."""
+    import hashlib
+
+    from rust_chunking_spark.kernels import vectorized as V
+
     _write_wal(spark, wal, str(tmp_path / "wal"))
     job = _mk_job(spark, str(tmp_path))
     job.run(str(tmp_path / "wal"), list(range(N_EPOCHS)))
-    store = job.chunk_store.read(spark)
-    n = store.count()
-    nd = store.select("chunk_hash").distinct().count()
-    assert n == nd > 0   # append path never duplicates a hash
+    rows = job.chunk_store.read(spark).collect()
+    got = {bytes(r.chunk_hash): (r.len, r.first_seen_epoch) for r in rows}
+    assert len(got) == len(rows) > 0   # append path never duplicates a hash
+
+    want: dict[bytes, tuple[int, int]] = {}
+    for ep in range(N_EPOCHS):
+        before = expected_final_state(wal[:ep])
+        after = expected_final_state(wal[:ep + 1])
+        for url, ev in after.items():
+            if url in before and before[url]["html"] == ev["html"]:
+                continue   # a no-op recrawl applies nothing
+            page = ev["html"]
+            for p, ln in V.super_chunks(page):
+                h = hashlib.sha3_256(page[p:p + ln]).digest()
+                want.setdefault(h, (int(ln), ep))
+    assert got == want
 
 
 def test_lww_uid_stable_under_recomputation(spark, tmp_path):

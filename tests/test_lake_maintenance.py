@@ -163,3 +163,76 @@ def test_lake_mode_is_persisted_metadata(tmp_path):
     plant(tmp_path / "mor", True)
     lake = MorBucketedLake(str(tmp_path / "mor"), n_buckets=8)
     assert lake.n_buckets == 4 and lake.committed_epochs() == {0}
+
+
+def test_append_table_legacy_manifest_stamps_schema(spark, tmp_path):
+    """An append-only table whose manifest records no schema (written
+    before schemas were recorded) still reads, by inference; its next
+    append stamps the schema, and reads use it from then on."""
+    import json
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "metrics"
+    os.makedirs(path / "data" / "append-e000000-legacy")
+    os.makedirs(path / "snapshots")
+    pq.write_table(pa.table({"bucket": [1], "decision": ["insert"],
+                             "cnt": [3], "epoch": [0]}),
+                   path / "data" / "append-e000000-legacy" / "part-0.parquet")
+    with open(path / "snapshots" / "v00000001.json", "w") as f:
+        json.dump({"version": 1, "files": {"0": ["append-e000000-legacy"]},
+                   "committed_epochs": [0], "schema": None, "stats": {}}, f)
+    with open(path / "snapshots" / "CURRENT", "w") as f:
+        f.write("v00000001.json")
+
+    table = AppendOnlyTable(str(path))
+    assert [tuple(r) for r in table.read(spark).collect()] == [
+        (1, "insert", 3, 0)]
+    table.append(spark.createDataFrame(
+        [(2, "noop", 5, 1)], "bucket long, decision string, cnt long, "
+                             "epoch long"), 1)
+    snap = table.current_snapshot()
+    assert snap["committed_epochs"] == [0, 1] and snap["schema"] is not None
+    got = table.read(spark)
+    assert got.dtypes == [("bucket", "bigint"), ("decision", "string"),
+                          ("cnt", "bigint"), ("epoch", "bigint")]
+    assert sorted(tuple(r) for r in got.collect()) == [
+        (1, "insert", 3, 0), (2, "noop", 5, 1)]
+
+
+def test_pyarrow_append_invisible_until_flip(spark, tmp_path, monkeypatch):
+    """A pyarrow-written append lands in an uncommitted directory, like a
+    Spark-written one: a crash before the manifest flip leaves an orphan
+    that reads never see and expiry collects, and the retried append
+    commits the epoch once."""
+    import os
+
+    import pyarrow as pa
+    import pytest
+
+    def rows(epoch):
+        return pa.Table.from_pylist(
+            [{"bucket": 1, "decision": "insert", "cnt": 2, "epoch": epoch}],
+            schema=CdcIngestJob.LINEAGE_SCHEMA)
+
+    table = AppendOnlyTable(str(tmp_path / "metrics"))
+    table.append(rows(0), 0)
+
+    def crash(snap):
+        raise RuntimeError("crash before the manifest flip")
+
+    monkeypatch.setattr(table, "_commit", crash)
+    with pytest.raises(RuntimeError):
+        table.append(rows(1), 1)
+    monkeypatch.undo()
+    assert len(os.listdir(tmp_path / "metrics" / "data")) == 2
+    assert table.committed_epochs() == {0}
+    assert [tuple(r) for r in table.read(spark).collect()] == [
+        (1, "insert", 2, 0)]
+    assert table.expire_snapshots() == 1          # the orphan directory
+    table.append(rows(1), 1)
+    table.append(rows(1), 1)                      # committed: a no-op
+    assert sorted(tuple(r) for r in table.read(spark).collect()) == [
+        (1, "insert", 2, 0), (1, "insert", 2, 1)]

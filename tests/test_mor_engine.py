@@ -68,7 +68,9 @@ def test_mor_writes_only_content_candidates(spark, wal, tmp_path):
     for m in results[1:]:
         stats = job.lake.current_snapshot()["stats"][str(m.epoch)]
         files = stats["merge_files"]
-        written = job.lake.read_files(spark, files)
+        written = job.lake.read_files(
+            spark, files, job.lake._schema_from_json(
+                job.lake.current_snapshot()["schema"]))
         n_written = written.count() if written is not None else 0
         assert n_written == m.applied_insert + m.applied_update
         assert n_written < m.events_seen  # never the whole batch, post-LWW

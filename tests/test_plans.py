@@ -49,6 +49,36 @@ def small_job(spark, tmp_path):
     return job, str(tmp_path / "wal")
 
 
+def test_warm_epoch_job_budget(spark, tmp_path):
+    """A warm epoch runs only the engine's data work as Spark jobs: reads
+    of engine-owned files use the schema the manifest records (no
+    schema-inference job), the metrics rows are written from the driver
+    by pyarrow (no job), and the chunk-store totals and histogram come
+    from one collect. AQE's stage split depends on data size, so the
+    budget is this WAL's own: 24 jobs, where mergeSchema reads, a Spark
+    write of the metrics rows and a second chunk-store collect took 33."""
+    wal = generate_wal(n_pages=0, n_epochs=3, events_per_epoch=30, seed=5)
+    for ep, events in enumerate(wal):
+        spark.createDataFrame([dict(e) for e in events]).write.mode(
+            "overwrite").parquet(f"{tmp_path}/wal/epoch={ep:06d}")
+    job = CdcIngestJob(spark, MorBucketedLake(str(tmp_path / "lake"),
+                                              n_buckets=4),
+                       AppendOnlyTable(str(tmp_path / "chunks")),
+                       AppendOnlyTable(str(tmp_path / "metrics")))
+    job.run(str(tmp_path / "wal"), [0, 1])
+    events = spark.read.parquet(f"{tmp_path}/wal/epoch=000002")
+    sc = spark.sparkContext
+    group = f"warm-epoch-{tmp_path.name}"
+    sc.setJobGroup(group, "warm epoch job budget")
+    try:
+        m = job.apply_epoch(events, 2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert m is not None and m.chunks_total > 0
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 24, n_jobs
+
+
 def test_merge_decision_join_is_column_pruned(spark, small_job):
     """The decision join reads skinny columns only: the lake side is the
     meta table (read_meta), and no scan in the plan — lake or event side —
